@@ -14,7 +14,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
@@ -47,6 +46,17 @@ def _sql_dot(a: str, b: str) -> str:
 
 def _sql_cosine(a: str, b: str) -> str:
     return f"({_sql_dot(a, b)} / (SQRT({_sql_dot(a, a)}) * SQRT({_sql_dot(b, b)})))"
+
+
+def _sql_proj(vec: str, plane: list[float]) -> str:
+    """DuckDB twin of one ``lsh_table_buckets`` projection: the plane
+    inlines as repr'd double literals (exact IEEE round-trip) under the
+    same left fold as the Spark expression."""
+    arr = "[" + ", ".join(repr(v) for v in plane) + "]"
+    return (
+        f"list_reduce(list_transform(list_zip({vec}, {arr}::DOUBLE[]), "
+        f"p -> CAST(p[1] AS DOUBLE) * p[2]), (acc, x) -> acc + x)"
+    )
 
 
 Q40_SQL = f"""
@@ -256,25 +266,16 @@ def lsh_table_buckets(
     return buckets
 
 
-def _gen_lsh_oracle_sql() -> str:
-    """Generated DuckDB oracle for q42 — the q38/q102 upgrade applied to
-    float LSH: the hyperplanes inline as repr'd double literals (exact
-    IEEE round-trip) and every projection is the SAME left fold as the
-    Spark expression, so bucket sign decisions, candidate sets, and the
-    final ranking are bit-identical cross-engine. Bucket boundaries are
-    NOT engine-internal after all — determinism was already total."""
+def _demo_lsh_sql_ctes(carry: str = "") -> str:
+    """The tagged/entries CTE prefix of the demo-width oracles (q42,
+    q169, q174) — the demo twin of ``_prod_lsh_sql_ctes``. ``carry`` is
+    a column list (``"label, "``) that rides from the corpus into both
+    CTEs after ``vec_id``."""
     planes = _hyperplanes()
-
-    def proj_sql(vec: str, plane: list[float]) -> str:
-        arr = "[" + ", ".join(repr(v) for v in plane) + "]"
-        return (
-            f"list_reduce(list_transform(list_zip({vec}, {arr}::DOUBLE[]), "
-            f"p -> CAST(p[1] AS DOUBLE) * p[2]), (acc, x) -> acc + x)"
-        )
 
     def bucket_sql(vec: str, t: int) -> str:
         bits = [
-            f"(CASE WHEN {proj_sql(vec, planes[t * LSH_BITS + i])} > 0 "
+            f"(CASE WHEN {_sql_proj(vec, planes[t * LSH_BITS + i])} > 0 "
             f"THEN {1 << i} ELSE 0 END)"
             for i in range(LSH_BITS)
         ]
@@ -284,18 +285,28 @@ def _gen_lsh_oracle_sql() -> str:
         f"{bucket_sql('embedding', t)} AS bucket{t}" for t in range(LSH_TABLES)
     )
     entry_selects = "\n  UNION ALL ".join(
-        f"SELECT vec_id, label, {t} AS tbl, bucket{t} AS bucket FROM tagged"
+        f"SELECT vec_id, {carry}{t} AS tbl, bucket{t} AS bucket FROM tagged"
         for t in range(LSH_TABLES)
     )
-    return f"""
-WITH tagged AS (
-  SELECT vec_id, label, embedding,
+    return f"""tagged AS (
+  SELECT vec_id, {carry}embedding,
          {tagged_buckets}
   FROM embeddings
 ),
 entries AS (
   {entry_selects}
-),
+)"""
+
+
+def _gen_lsh_oracle_sql() -> str:
+    """Generated DuckDB oracle for q42 — the q38/q102 upgrade applied to
+    float LSH: the hyperplanes inline as repr'd double literals (exact
+    IEEE round-trip) and every projection is the SAME left fold as the
+    Spark expression, so bucket sign decisions, candidate sets, and the
+    final ranking are bit-identical cross-engine. Bucket boundaries are
+    NOT engine-internal after all — determinism was already total."""
+    return f"""
+WITH {_demo_lsh_sql_ctes("label, ")},
 probe AS (SELECT tbl, bucket FROM entries WHERE vec_id = {QUERY_VEC_ID}),
 qv AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = {QUERY_VEC_ID}),
 cand AS (
@@ -521,6 +532,76 @@ def _prod_lsh_entries(e: DataFrame) -> DataFrame:
     )
 
 
+def _demo_lsh_entries(e: DataFrame) -> DataFrame:
+    """(vec_id, table, bucket) at the fixed demo width (LSH_TABLES ×
+    LSH_BITS) — q169/q174's bucket relation; lazily localCheckpointed
+    for the same reason as ``_prod_lsh_entries``."""
+    tagged = e.select(
+        "vec_id", *lsh_table_buckets(F.col("embedding"), _hyperplanes())
+    )
+    return tagged.select(
+        "vec_id",
+        F.posexplode(
+            F.array(*[F.col(f"bucket{t}") for t in range(LSH_TABLES)])
+        ).alias("table", "bucket"),
+    ).localCheckpoint(eager=False)
+
+
+def _lsh_pair_sims(
+    e: DataFrame, entries: DataFrame, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """UNORDERED bucket-candidate pairs with their exact cosine —
+    (src, dst, src_<c>…, dst_<c>…, sim) with src < dst, ``carry``
+    naming corpus columns that ride along from each end. The one pair
+    kernel behind the kNN (q169/q169b) and density (q174/q174b) faces.
+
+    - Candidates self-join the SLIM (vec_id, table, bucket) relation — no
+      array column rides through the bucket join or the pair dedupe, so
+      the shuffle is id-sized (the q36 lesson).
+    - src < dst: sim is bitwise-symmetric (IEEE multiply commutes, the
+      left fold adds the same addends in the same order, n_src·n_dst
+      commutes), so scoring both directions would pay the dominant
+      per-pair fold twice for identical bits; callers that need the
+      directed relation mirror it hash-invisibly.
+    - Norms are computed ONCE per vector (n-sized, map-only), not per
+      pair: dot/(n_src·n_dst) is bit-identical to cosine() — same fold,
+      same operands, same order — with one interpreted fold per pair
+      instead of three.
+    - Embeddings join back BY KEY, pinned ``shuffle_hash`` on the fat
+      side — Spark's size estimator undercounts array columns and
+      auto-broadcast OOMs at scale (plan-asserted in tests/test_plans.py)."""
+    a = entries.select(F.col("vec_id").alias("src"), "table", "bucket")
+    b = entries.select(F.col("vec_id").alias("dst"), "table", "bucket")
+    cand = (
+        a.join(b, ["table", "bucket"])
+        .filter(F.col("src") < F.col("dst"))
+        .select("src", "dst")
+        .distinct()
+    )
+
+    def side(end: str) -> DataFrame:
+        return e.select(
+            F.col("vec_id").alias(end),
+            *[F.col(c).alias(f"{end}_{c}") for c in carry],
+            F.col("embedding").alias(f"e_{end}"),
+            norm(F.col("embedding")).alias(f"n_{end}"),
+        ).hint("shuffle_hash")
+
+    return (
+        cand.join(side("src"), "src")
+        .join(side("dst"), "dst")
+        .select(
+            "src",
+            "dst",
+            *[f"{end}_{c}" for end in ("src", "dst") for c in carry],
+            (
+                dot(F.col("e_src"), F.col("e_dst"))
+                / (F.col("n_src") * F.col("n_dst"))
+            ).alias("sim"),
+        )
+    )
+
+
 def _prod_lsh_sql_ctes(table: str = "embeddings") -> str:
     """The lim/tagged/entries CTE prefix shared by the q169b and q174b
     oracles: the same integer width ladder, the same stride-indexed plane
@@ -529,17 +610,10 @@ def _prod_lsh_sql_ctes(table: str = "embeddings") -> str:
     width choice included."""
     planes = _prod_planes()
 
-    def proj_sql(vec: str, plane: list[float]) -> str:
-        arr = "[" + ", ".join(repr(v) for v in plane) + "]"
-        return (
-            f"list_reduce(list_transform(list_zip({vec}, {arr}::DOUBLE[]), "
-            f"p -> CAST(p[1] AS DOUBLE) * p[2]), (acc, x) -> acc + x)"
-        )
-
     def bucket_sql(vec: str, t: int) -> str:
         terms = [
             f"(CASE WHEN {i} < lim.bits AND "
-            f"{proj_sql(vec, planes[t * PROD_LSH_STRIDE + i])} > 0 "
+            f"{_sql_proj(vec, planes[t * PROD_LSH_STRIDE + i])} > 0 "
             f"THEN {1 << i} ELSE 0 END)"
             for i in range(PROD_LSH_SQL_BITS)
         ]
@@ -581,44 +655,13 @@ entries AS (
 )"""
 
 
-def _gen_knn_graph_sql() -> str:
-    """Generated oracle for q169: q42's bucket expressions feed an
-    all-within-bucket candidate self-join instead of a single probe; the
-    exact-cosine left fold and the per-source rank mirror the Spark plan
-    term for term."""
-    planes = _hyperplanes()
-
-    def proj_sql(vec: str, plane: list[float]) -> str:
-        arr = "[" + ", ".join(repr(v) for v in plane) + "]"
-        return (
-            f"list_reduce(list_transform(list_zip({vec}, {arr}::DOUBLE[]), "
-            f"p -> CAST(p[1] AS DOUBLE) * p[2]), (acc, x) -> acc + x)"
-        )
-
-    def bucket_sql(vec: str, t: int) -> str:
-        bits = [
-            f"(CASE WHEN {proj_sql(vec, planes[t * LSH_BITS + i])} > 0 "
-            f"THEN {1 << i} ELSE 0 END)"
-            for i in range(LSH_BITS)
-        ]
-        return " + ".join(bits)
-
-    tagged_buckets = ",\n         ".join(
-        f"{bucket_sql('embedding', t)} AS bucket{t}" for t in range(LSH_TABLES)
-    )
-    entry_selects = "\n  UNION ALL ".join(
-        f"SELECT vec_id, {t} AS tbl, bucket{t} AS bucket FROM tagged"
-        for t in range(LSH_TABLES)
-    )
+def _knn_sql(ctes: str) -> str:
+    """Generated oracle for q169/q169b: the bucket CTE prefix (demo or
+    production width) feeds an all-within-bucket candidate self-join;
+    the exact-cosine left fold and the per-source rank mirror the Spark
+    plan term for term."""
     return f"""
-WITH tagged AS (
-  SELECT vec_id, embedding,
-         {tagged_buckets}
-  FROM embeddings
-),
-entries AS (
-  {entry_selects}
-),
+WITH {ctes},
 cand AS (
   SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst
   FROM entries a JOIN entries b
@@ -640,24 +683,17 @@ SELECT src AS vec_id, dst AS nbr_id, src_label, nbr_label, sim, rank FROM (
 """
 
 
-@register("q169_knn_graph", _gen_knn_graph_sql())
+@register("q169_knn_graph", _knn_sql(_demo_lsh_sql_ctes()))
 def q169_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN GRAPH construction: every vector's top-KNN_K neighbours by
     exact cosine among its LSH-bucket candidates — the batch companion
     to q42's single-probe ANN, and the primitive behind semantic-dedup
     graphs, diversity sampling, and embedding-space cluster seeding.
 
-    Scale shape — three deliberate choices:
-    1. Candidate generation self-joins the SLIM (vec_id, table, bucket)
-       relation — no array column rides through the bucket join or the
-       pair dedupe, so the shuffle is id-sized (the q36 lesson applied
-       preemptively).
-    2. Embeddings join back BY KEY only for the deduped pairs, pinned
-       ``shuffle_hash`` on the fat side — Spark's size estimator
-       undercounts array columns and auto-broadcast OOMs at scale
-       (measured, SCALING.md; plan-asserted in tests/test_plans.py).
-    3. The top-k is a PER-SOURCE rank window (state bounded by bucket
-       candidate count per vector), not a global sort.
+    Scale shape: candidates and scores come from ``_lsh_pair_sims``
+    (slim bucket self-join, key-only shuffle_hash join-backs); the top-k
+    is a PER-SOURCE rank window (state bounded by bucket candidate count
+    per vector), not a global sort.
     Candidate volume is ~n²·L/2^bits per table — with FIXED bucket
     width it grows quadratically in corpus size, so at scale LSH_BITS
     must track the corpus (bits ≈ log2(n / target_bucket_size), e.g.
@@ -672,82 +708,28 @@ def q169_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     CALIBRATED to the corpus geometry (sign-LSH recall is a function of
     the neighbour angle; this near-uniform corpus caps top-1 recall at
     ~0.5 by math, while >0.8-cosine near-dup pairs recall >0.97)."""
-    planes = _hyperplanes()
     e = load_table(spark, sf_dir, "embeddings")
-    tagged = e.select(
-        "vec_id", "embedding", *lsh_table_buckets(F.col("embedding"), planes)
-    )
-    entries = tagged.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.col(f"bucket{t}") for t in range(LSH_TABLES)])
-        ).alias("table", "bucket"),
-    ).localCheckpoint(eager=False)
-    return _knn_graph_from_entries(e, entries)
+    return _knn_graph_from_entries(e, _demo_lsh_entries(e))
 
 
 def _knn_graph_from_entries(e: DataFrame, entries: DataFrame) -> DataFrame:
-    """Candidate self-join on the slim (vec_id, table, bucket) relation,
-    exact-cosine scoring via key-only join-backs (shuffle_hash pinned on
-    the fat array side), per-source rank window — shared verbatim by the
+    """The unordered scored pairs of ``_lsh_pair_sims`` mirrored to both
+    directions, then a per-source rank window — shared verbatim by the
     demo (q169) and production-width (q169b) faces; only the bucket
     relation differs."""
-    a = entries.select(
-        F.col("vec_id").alias("src"), "table", "bucket"
-    )
-    b = entries.select(
-        F.col("vec_id").alias("dst"), "table", "bucket"
-    )
-    # UNORDERED candidate pairs: the graph needs both directions, but
-    # sim is bitwise-symmetric (IEEE multiply commutes, the left-fold
-    # adds the same addends in the same order, n_src·n_dst commutes), so
-    # scoring (s,d) and (d,s) separately pays the dominant per-pair fold
-    # twice for identical bits — src<dst halves the dedupe shuffle, both
-    # join-backs, and the fold count; the mirror below restores the
-    # directed relation hash-invisibly.
-    cand = (
-        a.join(b, ["table", "bucket"])
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-    # Norms are computed ONCE per vector (n-sized, map-only) instead of
-    # once per candidate pair: sim = dot/(n_src·n_dst) is bit-identical to
-    # cosine() — same fold, same operands, same order — but drops two of
-    # the three per-pair interpreted folds (pairs ≫ vectors at any width).
-    ea = e.select(
-        F.col("vec_id").alias("src"),
-        F.col("label").alias("src_label"),
-        F.col("embedding").alias("e_src"),
-        norm(F.col("embedding")).alias("n_src"),
-    )
-    eb = e.select(
-        F.col("vec_id").alias("dst"),
-        F.col("label").alias("nbr_label"),
-        F.col("embedding").alias("e_dst"),
-        norm(F.col("embedding")).alias("n_dst"),
-    )
-    # Scoring runs in the Arrow batch scorer — bit-identical to the
-    # interpreted dot/(n_src·n_dst) fold (see _arrow_fold_sim); ranking
-    # stays in Spark so sim ordering (NaN included) never changes.
-    scored_u = _arrow_fold_sim(
-        cand.join(ea.hint("shuffle_hash"), "src").join(
-            eb.hint("shuffle_hash"), "dst"
-        ),
-        ["src", "dst", "src_label", "nbr_label"],
-    )
+    scored_u = _lsh_pair_sims(e, entries, carry=("label",))
     # Mirror via ONE explode — a union of two projections would make the
     # scored subtree a self-join Spark recomputes per branch (the r10
     # rule), paying both join-backs and every fold twice again.
     scored = scored_u.select(
         F.explode(
             F.array(
-                F.struct("src", "dst", "src_label", "nbr_label"),
+                F.struct("src", "dst", "src_label", "dst_label"),
                 F.struct(
                     F.col("dst").alias("src"),
                     F.col("src").alias("dst"),
-                    F.col("nbr_label").alias("src_label"),
-                    F.col("src_label").alias("nbr_label"),
+                    F.col("dst_label").alias("src_label"),
+                    F.col("src_label").alias("dst_label"),
                 ),
             )
         ).alias("p"),
@@ -761,41 +743,14 @@ def _knn_graph_from_entries(e: DataFrame, entries: DataFrame) -> DataFrame:
             F.col("src").alias("vec_id"),
             F.col("dst").alias("nbr_id"),
             "src_label",
-            "nbr_label",
+            F.col("dst_label").alias("nbr_label"),
             "sim",
             "rank",
         )
     )
 
 
-def _gen_knn_graph_sql_prod() -> str:
-    """Generated oracle for q169b: the production-width CTE prefix
-    (integer width ladder + stride-indexed plane literals) feeding the
-    SAME candidate/score/rank tail as the q169 oracle."""
-    return f"""
-WITH {_prod_lsh_sql_ctes()},
-cand AS (
-  SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst
-  FROM entries a JOIN entries b
-    ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id <> b.vec_id
-),
-scored AS (
-  SELECT c.src, c.dst, ea.label AS src_label, eb.label AS nbr_label,
-         {_sql_cosine('ea.embedding', 'eb.embedding')} AS sim
-  FROM cand c
-  JOIN embeddings ea ON ea.vec_id = c.src
-  JOIN embeddings eb ON eb.vec_id = c.dst
-)
-SELECT src AS vec_id, dst AS nbr_id, src_label, nbr_label, sim, rank FROM (
-  SELECT src, dst, src_label, nbr_label, sim,
-         CAST(ROW_NUMBER() OVER (PARTITION BY src ORDER BY sim DESC, dst)
-              AS BIGINT) AS rank
-  FROM scored
-) WHERE rank <= {KNN_K}
-"""
-
-
-@register("q169b_knn_graph_production", _gen_knn_graph_sql_prod())
+@register("q169b_knn_graph_production", _knn_sql(_prod_lsh_sql_ctes()))
 def q169b_knn_graph_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN graph at PRODUCTION LSH width: bits ≈ log2(n / target_bucket)
     chosen from the corpus size by the shared integer ladder (see the
@@ -821,44 +776,14 @@ DBS_EPS = 0.35
 DBS_MINPTS = 3
 
 
-def _gen_density_sql() -> str:
-    """Generated oracle for q174: q169's bucket/candidate/cosine stages
-    feed DBSCAN's core/border classification and a recursive CC over
-    core-core edges — stage-for-stage with the Spark plan, including
-    the deterministic border tie-break (MIN adjacent core cluster)."""
-    planes = _hyperplanes()
-
-    def proj_sql(vec: str, plane: list[float]) -> str:
-        arr = "[" + ", ".join(repr(v) for v in plane) + "]"
-        return (
-            f"list_reduce(list_transform(list_zip({vec}, {arr}::DOUBLE[]), "
-            f"p -> CAST(p[1] AS DOUBLE) * p[2]), (acc, x) -> acc + x)"
-        )
-
-    def bucket_sql(vec: str, t: int) -> str:
-        bits = [
-            f"(CASE WHEN {proj_sql(vec, planes[t * LSH_BITS + i])} > 0 "
-            f"THEN {1 << i} ELSE 0 END)"
-            for i in range(LSH_BITS)
-        ]
-        return " + ".join(bits)
-
-    tagged_buckets = ",\n         ".join(
-        f"{bucket_sql('embedding', t)} AS bucket{t}" for t in range(LSH_TABLES)
-    )
-    entry_selects = "\n  UNION ALL ".join(
-        f"SELECT vec_id, {t} AS tbl, bucket{t} AS bucket FROM tagged"
-        for t in range(LSH_TABLES)
-    )
+def _density_sql(ctes: str) -> str:
+    """Generated oracle for q174/q174b: the bucket CTE prefix (demo or
+    production width) feeds the candidate/cosine stages, DBSCAN's
+    core/border classification and a recursive CC over core-core edges —
+    stage-for-stage with the Spark plan, including the deterministic
+    border tie-break (MIN adjacent core cluster)."""
     return f"""
-WITH RECURSIVE tagged AS (
-  SELECT vec_id, embedding,
-         {tagged_buckets}
-  FROM embeddings
-),
-entries AS (
-  {entry_selects}
-),
+WITH RECURSIVE {ctes},
 cand AS (
   SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst
   FROM entries a JOIN entries b
@@ -899,7 +824,7 @@ SELECT vec_id, cluster_id, CAST(0 AS BIGINT) AS is_core FROM border
 """
 
 
-@register("q174_density_clusters", _gen_density_sql())
+@register("q174_density_clusters", _density_sql(_demo_lsh_sql_ctes()))
 def q174_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DBSCAN-style density clustering over the LSH candidate graph:
     eps-neighbor edges (cosine >= DBS_EPS among bucket candidates), core
@@ -922,112 +847,16 @@ def q174_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximation is in candidate generation only, mirrored exactly by
     the oracle)."""
     e = load_table(spark, sf_dir, "embeddings")
-    planes = _hyperplanes()
-    tagged = e.select(
-        "vec_id", "embedding", *lsh_table_buckets(F.col("embedding"), planes)
-    )
-    entries = tagged.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.col(f"bucket{t}") for t in range(LSH_TABLES)])
-        ).alias("table", "bucket"),
-    ).localCheckpoint(eager=False)
-    return _density_from_entries(e, entries)
-
-
-def _arrow_fold_sim(joined: DataFrame, passthrough: list[str]) -> DataFrame:
-    """Append ``sim`` = fold-dot(e_src, e_dst) / (n_src · n_dst) to
-    ``joined`` in ONE Arrow crossing, bit-identical to the interpreted
-    ``dot(...)/(n_src*n_dst)`` expression (guide §4.2: batch the Python
-    boundary, vectorize in native code).
-
-    Bit-parity argument: the engine's ``dot`` is a LEFT FOLD —
-    ((0.0 + a₀·b₀) + a₁·b₁) + … — and the numpy loop below accumulates
-    dimension-by-dimension ACROSS the pair batch (``acc = acc + a_d·b_d``),
-    so every pair's lane performs the identical IEEE addition sequence;
-    float32 inputs widen exactly (same as ``cast("double")``), the final
-    divide and the norm product are single IEEE ops in both forms. NaN
-    semantics are untouched because the sim column is returned to Spark
-    and compared/ranked THERE, not in Python. The interpreted
-    higher-order fold evaluates per pair in the expression interpreter
-    (~µs/pair, no codegen for lambda bodies); the Arrow form ships the
-    two vectors once per pair and runs 64 vectorized ops per batch."""
-    import numpy as np
-    import pyarrow as pa
-
-    from ..session import ship_package
-
-    ship_package(joined.sparkSession)
-    cols = [*passthrough, "e_src", "n_src", "e_dst", "n_dst"]
-    src = joined.select(*cols)
-    out_fields = [src.schema[c] for c in passthrough]
-    out_schema = StructType(
-        [*out_fields, StructField("sim", DoubleType(), True)]
-    )
-
-    def score(batches):
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            idx = {name: i for i, name in enumerate(b.schema.names)}
-            va = np.asarray(
-                b.column(idx["e_src"]).flatten(), dtype=np.float64
-            ).reshape(n, -1)
-            vb = np.asarray(
-                b.column(idx["e_dst"]).flatten(), dtype=np.float64
-            ).reshape(n, -1)
-            acc = np.zeros(n, dtype=np.float64)
-            for d in range(va.shape[1]):
-                acc = acc + va[:, d] * vb[:, d]
-            na = np.asarray(b.column(idx["n_src"]), dtype=np.float64)
-            nb = np.asarray(b.column(idx["n_dst"]), dtype=np.float64)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sim = acc / (na * nb)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(idx[c]) for c in passthrough]
-                + [pa.array(sim, type=pa.float64())],
-                names=[*passthrough, "sim"],
-            )
-
-    return src.mapInArrow(score, out_schema)
+    return _density_from_entries(e, _demo_lsh_entries(e))
 
 
 def _eps_edges(e: DataFrame, entries: DataFrame) -> DataFrame:
-    """The eps-neighbor edge stage shared by q174/q174b: bucket-candidate
-    self-join on the slim entries relation, then exact-cosine filtering
-    via key-only join-backs (shuffle_hash pinned on the fat array side —
-    plan-asserted separately for both faces, since the eager checkpoint
-    in _density_from_entries hides this stage from the final plan).
-    Scoring runs in the Arrow batch scorer (`_arrow_fold_sim`,
-    bit-identical to the interpreted fold — VERDICT r12 item 4); the
-    threshold compare stays a Spark filter so NaN ordering semantics
-    never leave the engine."""
-    a = entries.select(F.col("vec_id").alias("src"), "table", "bucket")
-    b = entries.select(F.col("vec_id").alias("dst"), "table", "bucket")
-    cand = (
-        a.join(b, ["table", "bucket"])
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-    # Per-vector norms, per-pair dot only — bit-identical to cosine()
-    # (see _knn_graph_from_entries).
-    ea = e.select(
-        F.col("vec_id").alias("src"),
-        F.col("embedding").alias("e_src"),
-        norm(F.col("embedding")).alias("n_src"),
-    )
-    eb = e.select(
-        F.col("vec_id").alias("dst"),
-        F.col("embedding").alias("e_dst"),
-        norm(F.col("embedding")).alias("n_dst"),
-    )
-    joined = cand.join(ea.hint("shuffle_hash"), "src").join(
-        eb.hint("shuffle_hash"), "dst"
-    )
+    """The eps-neighbor edge stage shared by q174/q174b: the unordered
+    scored candidate pairs with cosine >= DBS_EPS. The eager checkpoint
+    in _density_from_entries hides this stage from the final plan, so
+    its shuffle_hash join-backs are plan-asserted on this function."""
     return (
-        _arrow_fold_sim(joined, ["src", "dst"])
+        _lsh_pair_sims(e, entries)
         .filter(F.col("sim") >= DBS_EPS)
         .select("src", "dst")
     )
@@ -1103,53 +932,9 @@ def _density_from_entries(e: DataFrame, entries: DataFrame) -> DataFrame:
     )
 
 
-def _gen_density_sql_prod() -> str:
-    """Generated oracle for q174b: the production-width CTE prefix feeding
-    the SAME eps-edge / core / recursive-CC / border tail as the q174
-    oracle."""
-    return f"""
-WITH RECURSIVE {_prod_lsh_sql_ctes()},
-cand AS (
-  SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst
-  FROM entries a JOIN entries b
-    ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id
-),
-edges AS (
-  SELECT c.src, c.dst
-  FROM cand c
-  JOIN embeddings ea ON ea.vec_id = c.src
-  JOIN embeddings eb ON eb.vec_id = c.dst
-  WHERE {_sql_cosine('ea.embedding', 'eb.embedding')} >= {DBS_EPS}
-),
-sym AS (
-  SELECT src, dst FROM edges UNION ALL SELECT dst AS src, src AS dst FROM edges
-),
-deg AS (SELECT src AS node, COUNT(*) AS d FROM sym GROUP BY src),
-core AS (SELECT node FROM deg WHERE d >= {DBS_MINPTS}),
-core_edges AS (
-  SELECT s.src, s.dst FROM sym s
-  JOIN core c1 ON c1.node = s.src JOIN core c2 ON c2.node = s.dst
-),
-conn(src, dst) AS (
-  SELECT node, node FROM core
-  UNION
-  SELECT conn.src, e.dst FROM conn JOIN core_edges e ON conn.dst = e.src
-),
-core_labels AS (SELECT src AS vec_id, MIN(dst) AS cluster_id FROM conn GROUP BY src),
-border AS (
-  SELECT s.src AS vec_id, MIN(cl.cluster_id) AS cluster_id
-  FROM sym s
-  JOIN core_labels cl ON cl.vec_id = s.dst
-  WHERE s.src NOT IN (SELECT node FROM core)
-  GROUP BY s.src
+@register(
+    "q174b_density_clusters_production", _density_sql(_prod_lsh_sql_ctes())
 )
-SELECT vec_id, cluster_id, CAST(1 AS BIGINT) AS is_core FROM core_labels
-UNION ALL
-SELECT vec_id, cluster_id, CAST(0 AS BIGINT) AS is_core FROM border
-"""
-
-
-@register("q174b_density_clusters_production", _gen_density_sql_prod())
 def q174b_density_clusters_production(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

@@ -404,12 +404,15 @@ def _cooccur_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sort_array(F.collect_set("l_partkey")).alias("ps")
     )
     # The C(basket,2) explode + count is the dominant shuffle of every
-    # co-occurrence consumer: pack (pa, pb) into ONE BIGINT (part keys
-    # < 10^9 at every SF — the TRI_RK contract; parts are dims, never
-    # replica-strided) so the explode emits a PRIMITIVE long array
-    # instead of an array of structs and the count hashes one long key
-    # instead of two columns (guide §2.3, narrower shuffle keys).
-    # Bijective, so groups — and the surviving edge set — are identical.
+    # co-occurrence consumer: pack (pa, pb) into ONE BIGINT so the
+    # explode emits a PRIMITIVE long array instead of an array of structs
+    # and the count hashes one long key instead of two columns (guide
+    # §2.3, narrower shuffle keys). The pack is bijective — groups and
+    # the surviving edge set are identical — only while 0 <= key < 2^31:
+    # shiftright on a signed long is arithmetic, so a larger key would
+    # unpack negative. Parts are dims, never replica-strided, and
+    # tests/test_graph_guards.py::test_part_keys_fit_the_packed_pair_width
+    # pins the bound on every testdata SF.
     pairs = sets.select(
         F.explode(
             F.expr(
@@ -995,10 +998,10 @@ def link_prediction_topk(
     # The wedge relation is the scale cost (Σ C(deg,2) rows — the
     # quadratic-in-density regime), so make each wedge as CHEAP as
     # possible (guide §2.3, shuffle fewer bytes / narrower keys):
-    # - (u, v) packs into ONE BIGINT — part keys are < 10^9 at every SF
-    #   (the TRI_RK contract; parts are dims, never replica-strided), so
-    #   shiftleft(u, 32) + v is bijective. The explode then emits a
-    #   PRIMITIVE long array instead of an array of structs, the
+    # - (u, v) packs into ONE BIGINT — shiftleft(u, 32) + v is bijective
+    #   while part keys are in [0, 2^31) (arithmetic shiftright; pinned by
+    #   test_part_keys_fit_the_packed_pair_width). The explode then emits
+    #   a PRIMITIVE long array instead of an array of structs, the
     #   aggregate hashes/compares one long key instead of two columns,
     #   and the shuffle row shrinks by a third.
     # - the center's RA contribution (RA_SCALE DIV d) is constant per

@@ -78,12 +78,7 @@ def main() -> None:
         "vec_id", "embedding", *S.lsh_table_buckets(F.col("embedding"), dplanes)
     )
     t("demo tagged (6x5 folds)", dtagged)
-    dentries = dtagged.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.col(f"bucket{t_}") for t_ in range(S.LSH_TABLES)])
-        ).alias("table", "bucket"),
-    ).localCheckpoint(eager=False)
+    dentries = S._demo_lsh_entries(e)
     da = dentries.select(F.col("vec_id").alias("src"), "table", "bucket")
     db = dentries.select(F.col("vec_id").alias("dst"), "table", "bucket")
     dcand = (

@@ -6,22 +6,28 @@ structs inside one task, and unbounded explodes must be refused unless
 explicitly opted into (the E23i narrow-chunk guard discipline). The
 md5 selection is pinned against an independent hashlib reimplementation
 so a silent hash/order drift cannot pass, and LPA's ``deg_cap`` is
-pinned against a pure-Python simulation of the capped rounds.
+pinned against a pure-Python simulation of the capped rounds. The
+packed (u, v) pair-key width is pinned against the testdata part keys.
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from redix_stream_spark.catalog import table_path
 from redix_stream_spark.operators.graph import (
     LP_DEG_CAP,
     RA_SCALE,
     link_prediction_topk,
     lpa_communities,
 )
+
+from .conftest import SF_DIR
 
 
 def _star_edges(spark, n_leaves: int):
@@ -38,6 +44,25 @@ def _md5_kept(src: int, neighbors, cap: int):
             key=lambda d: (hashlib.md5(f"{src}:{d}".encode()).hexdigest(), d),
         )[:cap]
     )
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_part_keys_fit_the_packed_pair_width(sf):
+    """The co-occurrence and wedge explodes pack two part keys into one
+    BIGINT as shiftleft(u, 32) + v and unpack with shiftright/mod. The
+    pack is bijective only for 0 <= key < 2^31: shiftright on a signed
+    long is arithmetic, so a key >= 2^31 would unpack negative. Read
+    from the parquet footer statistics (no JVM) at every testdata SF."""
+    path = table_path(os.path.join(os.path.dirname(SF_DIR), sf), "lineitem")
+    md = pq.ParquetFile(path).metadata
+    col = md.schema.to_arrow_schema().get_field_index("l_partkey")
+    stats = [
+        md.row_group(r).column(col).statistics
+        for r in range(md.num_row_groups)
+    ]
+    assert stats and all(s is not None and s.has_min_max for s in stats)
+    assert 0 <= min(s.min for s in stats)
+    assert max(s.max for s in stats) < 2**31
 
 
 def test_unbounded_wedge_explode_is_refused_without_opt_in(spark):

@@ -1774,47 +1774,3 @@ def test_q107b_matches_exact_face_and_budget_binds(spark, tmp_path, monkeypatch)
     capped = pairs(Q["q107b_containment_budgeted"](spark, tmp))
     assert len([p for p in capped if p[0] == 101]) == 1
     assert capped < fast
-
-
-def test_arrow_fold_sim_bit_identical_to_interpreted_fold(spark, sf_dir):
-    """The Arrow batch scorer (round 13) must reproduce the interpreted
-    left-fold cosine BIT-FOR-BIT: the numpy loop accumulates dimension-
-    by-dimension across the pair batch, so each pair's lane performs the
-    identical IEEE addition sequence as F.aggregate's fold. Exact ==
-    on the doubles — no tolerance — over every LSH-candidate-style pair
-    of the sf0.001 corpus."""
-    from pyspark.sql import functions as F
-
-    from redix_stream_spark.catalog import load_table
-    from redix_stream_spark.llm.similarity import _arrow_fold_sim, dot, norm
-
-    e = load_table(spark, sf_dir, "embeddings")
-    ea = e.select(
-        F.col("vec_id").alias("src"),
-        F.col("embedding").alias("e_src"),
-        norm(F.col("embedding")).alias("n_src"),
-    ).filter(F.col("src") < 40)
-    eb = e.select(
-        F.col("vec_id").alias("dst"),
-        F.col("embedding").alias("e_dst"),
-        norm(F.col("embedding")).alias("n_dst"),
-    ).filter(F.col("dst") < 40)
-    joined = ea.join(eb, F.col("src") < F.col("dst"))
-    old = {
-        (r["src"], r["dst"]): r["sim"]
-        for r in joined.select(
-            "src",
-            "dst",
-            (
-                dot(F.col("e_src"), F.col("e_dst"))
-                / (F.col("n_src") * F.col("n_dst"))
-            ).alias("sim"),
-        ).collect()
-    }
-    new = {
-        (r["src"], r["dst"]): r["sim"]
-        for r in _arrow_fold_sim(joined, ["src", "dst"]).collect()
-    }
-    assert old.keys() == new.keys() and len(old) == 780
-    diff = {k: (old[k], new[k]) for k in old if old[k] != new[k]}
-    assert not diff, list(diff.items())[:5]

@@ -9,6 +9,8 @@ aggregates. A regression here is a scale bug even when results stay right.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from redix_stream_spark import registry
@@ -713,29 +715,15 @@ def test_q174b_production_fat_joins_are_shuffle_hash(spark, sf_dir):
     auto-broadcast). The eager checkpoint in _density_from_entries hides
     this stage from the FINAL plan, so the pin targets the edge stage
     itself — for both the production and demo bucket relations."""
-    from pyspark.sql import functions as F
-
     from redix_stream_spark.catalog import load_table
     from redix_stream_spark.llm.similarity import (
-        LSH_TABLES,
+        _demo_lsh_entries,
         _eps_edges,
-        _hyperplanes,
         _prod_lsh_entries,
-        lsh_table_buckets,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    demo_entries = e.select(
-        "vec_id",
-        "embedding",
-        *lsh_table_buckets(F.col("embedding"), _hyperplanes()),
-    ).select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.col(f"bucket{t}") for t in range(LSH_TABLES)])
-        ).alias("table", "bucket"),
-    )
-    for entries in (_prod_lsh_entries(e), demo_entries):
+    for entries in (_prod_lsh_entries(e), _demo_lsh_entries(e)):
         plan = plan_of(_eps_edges(e, entries))
         assert "ShuffledHashJoin" in plan
         assert "CartesianProduct" not in plan
@@ -1082,54 +1070,48 @@ def test_q211b_winnow_pipeline_materializes_once(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_q174b_eps_scoring_is_one_arrow_crossing(spark, sf_dir):
-    """Round 13 (VERDICT r12 item 4): the eps-edge cosine runs in ONE
-    Arrow batch scorer (bit-identical fold order, guide §4.2) instead of
-    the interpreted per-pair higher-order fold. The eager checkpoint in
-    _density_from_entries hides the stage from the final plan, so the
-    pin targets the edge stage; the threshold compare must stay a Spark
-    Filter ABOVE the Arrow node (NaN ordering never leaves the engine)."""
-    from pyspark.sql import functions as F
+def _assert_jvm_pair_scoring(name, plan):
+    """The LSH pair stages score through ONE kernel, ``_lsh_pair_sims``:
+    the interpreted left fold over key-only shuffle_hash join-backs. A
+    per-pair Arrow crossing lost to that fold on kNN (q169 +45% at sf0.1)
+    and was removed, so no Python node may appear."""
+    for node in ("MapInArrow", "EvalPython", "InPandas"):
+        assert node not in plan, (name, node)
+    # one "(N) ShuffledHashJoin" detail line per join node
+    join_backs = re.findall(r"^\(\d+\) ShuffledHashJoin$", plan, re.M)
+    assert len(join_backs) >= 2, (name, join_backs)
 
+
+def test_q174b_eps_scoring_is_one_arrow_crossing(spark, sf_dir):
+    """The eps-edge pair stage (q174/q174b) once crossed to Arrow once;
+    it now crosses zero times and scores in the JVM fold. The eager
+    checkpoint in _density_from_entries hides the stage from the final
+    plan, so the edge stage is planned directly."""
     from redix_stream_spark.catalog import load_table
-    from redix_stream_spark.llm.similarity import (
-        LSH_TABLES,
-        _eps_edges,
-        _hyperplanes,
-        lsh_table_buckets,
-    )
+    from redix_stream_spark.llm.similarity import _demo_lsh_entries, _eps_edges
 
     e = load_table(spark, sf_dir, "embeddings")
-    entries = e.select(
-        "vec_id",
-        "embedding",
-        *lsh_table_buckets(F.col("embedding"), _hyperplanes()),
-    ).select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.col(f"bucket{t}") for t in range(LSH_TABLES)])
-        ).alias("table", "bucket"),
-    )
-    plan = plan_of(_eps_edges(e, entries))
-    assert plan.count("MapInArrow (") == 1  # once in the tree
-    # no interpreted fold left in the pair stage: aggregate(...) only
-    # appears below the Arrow node via the per-VECTOR norm projection.
+    plan = plan_of(_eps_edges(e, _demo_lsh_entries(e)))
+    _assert_jvm_pair_scoring("eps_edges", plan)
+    # the threshold compare stays a Spark Filter
     assert "Filter" in plan
 
 
 def test_q169_knn_scoring_is_one_arrow_crossing(spark, sf_dir):
-    """q169/q169b share the Arrow fold scorer: exactly one MapInArrow
-    node per kNN plan, and the rank window still runs in Spark."""
+    """The kNN plans (q169/q169b) once crossed to Arrow once; they now
+    cross zero times, share the JVM fold with the eps stage, and the rank
+    window still runs in Spark."""
     for name in ("q169_knn_graph", "q169b_knn_graph_production"):
         plan = plan_of(QUERIES[name](spark, sf_dir))
-        assert plan.count("MapInArrow (") == 1, name
+        _assert_jvm_pair_scoring(name, plan)
+        assert "Window" in plan, name
 
 
 def test_q176_wedges_aggregate_on_packed_long_key(spark, sf_dir):
     """Round 13: the Σ C(deg,2) wedge relation — q176's scale cost —
     explodes PRIMITIVE packed longs (shiftleft(u,32)+v; part keys are
-    < 10^9, the TRI_RK contract) and the candidate aggregate + non-edge
-    anti-join key on that one BIGINT instead of two columns."""
+    < 2^31, pinned in test_graph_guards.py) and the candidate aggregate
+    + non-edge anti-join key on that one BIGINT instead of two columns."""
     for name in ("q176_link_prediction", "q176b_link_prediction_capped"):
         plan = plan_of(QUERIES[name](spark, sf_dir))
         assert "shiftleft" in plan, name
@@ -1148,4 +1130,5 @@ def test_q36_shingle_sets_scan_parquet_not_cache(spark, sf_dir):
         for l in plan.splitlines()
         if "Location" in l and "redix_ssets_" in l
     ]
-    assert len(sset_scans) >= 1, plan.count("Location")
+    # Exactly one scratch scan per pair-join side.
+    assert len(sset_scans) == 2, sset_scans
