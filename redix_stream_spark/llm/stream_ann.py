@@ -55,15 +55,30 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 
 from ..session import ship_package
 from ..streaming.commit import GenerationState
+from ..streaming.log import local_frame
 from .similarity import cosine
 
 #: Matches the testdata embeddings table (label is an int cluster id;
 #: vectors are float32 at rest — ``dot`` upcasts per element, so scoring
 #: runs in double regardless).
 INDEX_SCHEMA = "vec_id long, label int, embedding array<float>, cell int"
+#: One row per cell: the persisted k-means codebook.
+CODEBOOK_SCHEMA = StructType(
+    [
+        StructField("cell", IntegerType()),
+        StructField("centroid", ArrayType(DoubleType())),
+    ]
+)
 
 
 def _train_centroids(
@@ -161,12 +176,12 @@ class StreamingIvfIndex:
     def _write_codebook(
         self, spark: SparkSession, cents: list[tuple[int, list[float]]]
     ) -> None:
-        spark.createDataFrame(
-            cents, "cell int, centroid array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(self.codebook_path)
+        local_frame(spark, cents, CODEBOOK_SCHEMA).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(self.codebook_path)
 
     def centroids(self, spark: SparkSession) -> DataFrame:
-        return spark.read.schema("cell int, centroid array<double>").parquet(
+        return spark.read.schema(CODEBOOK_SCHEMA).parquet(
             self.codebook_path
         )
 

@@ -34,11 +34,21 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
+from ..streaming.log import local_frame
 from .stream_dedup import StreamingNearDupFilter
 from .text import quality_columns
 
 _QUALITY_RANK = {"low": 0, "medium": 1, "high": 2}
+
+#: One row per epoch, under ``stats/epoch=<id>``.
+_STATS_SCHEMA = StructType(
+    [
+        StructField(name, LongType())
+        for name in ("n_in", "n_quality_rejected", "n_submitted")
+    ]
+)
 
 
 class StreamingCorpusCleaner:
@@ -87,12 +97,7 @@ class StreamingCorpusCleaner:
                 # Withheld epoch: record it in stats (idempotent
                 # overwrite like any epoch) and touch NOTHING else —
                 # no quality pass, no band claims.
-                spark.createDataFrame(
-                    [(0, 0, 0)],
-                    "n_in long, n_quality_rejected long, n_submitted long",
-                ).coalesce(1).write.mode("overwrite").parquet(
-                    os.path.join(self.stats_root, f"epoch={epoch_id}")
-                )
+                self._write_stats(spark, epoch_id, 0, 0)
                 return
             # Promoted: continue from the published staging data (the
             # batch was already materialized by the gate's one pass —
@@ -109,18 +114,21 @@ class StreamingCorpusCleaner:
         ).collect()[0]
         self.dedup.apply_batch(good, epoch_id)
         scored.unpersist()
+        self._write_stats(
+            spark,
+            epoch_id,
+            int(counts["n_in"]),
+            int(counts["n_quality_rejected"] or 0),
+        )
+
+    def _write_stats(
+        self, spark: SparkSession, epoch_id: int, n_in: int, n_rejected: int
+    ) -> None:
         # The epoch id lives in the directory name only (partition
         # discovery recovers it as a column; storing it in the file too
         # would collide with the partition column).
-        stats = spark.createDataFrame(
-            [
-                (
-                    int(counts["n_in"]),
-                    int(counts["n_quality_rejected"] or 0),
-                    int(counts["n_in"]) - int(counts["n_quality_rejected"] or 0),
-                )
-            ],
-            "n_in long, n_quality_rejected long, n_submitted long",
+        stats = local_frame(
+            spark, [(n_in, n_rejected, n_in - n_rejected)], _STATS_SCHEMA
         )
         # Overwrite-per-epoch ⇒ crash-replay idempotent (matview rule).
         stats.coalesce(1).write.mode("overwrite").parquet(

@@ -52,16 +52,24 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from enum import Enum
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..session import ship_package
 from typing import TYPE_CHECKING
 
-from .log import MESSAGE_SCHEMA, TOMBSTONE, EventLog
+from .log import MESSAGE_SCHEMA, TOMBSTONE, EventLog, local_frame
 
 if TYPE_CHECKING:  # runtime import is lazy (in _stream) to avoid a cycle
     from .manifest_log import ManifestEventLog
+
+
+#: Group ack log (XACK) and dead-letter log rows.
+ACK_SCHEMA = StructType([StructField("id", StringType())])
+DLQ_SCHEMA = StructType(
+    [StructField("id", StringType()), StructField("error", StringType())]
+)
 
 
 class HandlerResult(Enum):
@@ -261,30 +269,36 @@ class Consumer:
                 | ((F.col("ms") == lo_ms) & (F.col("seq") > lo_seq))
             )
         )
-        top = filtered.agg(
-            F.max(F.struct("ms", "seq")).alias("top")
-        ).collect()[0]["top"]
+        if self.ordering == "strict":
+            # One scan: the batch comes to the driver anyway, so sort it
+            # here and take the top from the last row.
+            rows = sorted(filtered.collect(), key=lambda r: (r["ms"], r["seq"]))
+            top = (rows[-1]["ms"], rows[-1]["seq"]) if rows else None
+        else:
+            hi = filtered.agg(F.max(F.struct("ms", "seq"))).collect()[0][0]
+            top = (hi["ms"], hi["seq"]) if hi is not None else None
         # Delivery attempt recorded BEFORE handlers run: after a crash
         # mid-batch, [delivered, attempted] is this consumer's pending
         # backlog — redelivered under process_pending=True, skipped
         # under False (the reference's ">").
         if top is not None:
-            self._write_pos(self.attempted_file, top["ms"], top["seq"])
+            self._write_pos(self.attempted_file, *top)
         if self.ordering == "strict":
-            self._apply_strict(spark, filtered)
+            self._apply_strict(spark, rows)
         else:
             self._apply_by_key(spark, filtered)
         # Batch fully applied (acks/DLQ written) → advance the delivered
         # watermark. On a crash above, this never runs and the batch
         # redelivers — at-least-once, same commit point as the ack write.
         if top is not None:
-            self._advance_delivered(top["ms"], top["seq"])
+            self._advance_delivered(*top)
 
-    def _apply_strict(self, spark: SparkSession, filtered: DataFrame) -> None:
+    def _apply_strict(self, spark: SparkSession, rows: list[Row]) -> None:
         """Parity mode: global (ms, seq) order, driver-side apply — exactly
         the reference's single-process sequential loop (README.md:124).
-        Inherently single-stream; use by_key for scale."""
-        rows = filtered.orderBy("ms", "seq").collect()
+        Inherently single-stream; use by_key for scale. ``rows`` is the
+        batch, collected and already in (ms, seq) order; acks and dead
+        letters go out as Arrow-backed local frames (``local_frame``)."""
         acks: list[str] = []
         failures: list[tuple[str, str]] = []
         for r in rows:
@@ -304,9 +318,9 @@ class Consumer:
         if acks:
             self._append_acks(spark, acks)
         if failures:
-            spark.createDataFrame(failures, "id string, error string").coalesce(
-                1
-            ).write.mode("append").parquet(self._write_subdir(self.dlq_dir))
+            local_frame(spark, failures, DLQ_SCHEMA).coalesce(1).write.mode(
+                "append"
+            ).parquet(self._write_subdir(self.dlq_dir))
 
     def _apply_by_key(self, spark: SparkSession, filtered: DataFrame) -> None:
         """Scale mode: handlers run ON THE EXECUTORS, per-key ordered.
@@ -361,7 +375,7 @@ class Consumer:
             results.unpersist()
 
     def _append_acks(self, spark: SparkSession, ids: list[str]) -> None:
-        spark.createDataFrame([(i,) for i in ids], "id string").coalesce(1).write.mode(
+        local_frame(spark, [(i,) for i in ids], ACK_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(self._write_subdir(self.ack_dir))
 
@@ -374,9 +388,9 @@ class Consumer:
 
     def acked(self, spark: SparkSession) -> DataFrame:
         if not os.path.exists(self.ack_dir):
-            return spark.createDataFrame([], "id string")
+            return spark.createDataFrame([], ACK_SCHEMA)
         return (
-            spark.read.schema("id string")
+            spark.read.schema(ACK_SCHEMA)
             .option("recursiveFileLookup", "true")  # member-* subtrees
             .parquet(self.ack_dir)
             .distinct()
@@ -406,9 +420,9 @@ class Consumer:
         failure twice — at-least-once applies to the DLQ write too — so
         reads dedup, exactly like ``acked()`` does for acks."""
         if not os.path.exists(self.dlq_dir):
-            return spark.createDataFrame([], "id string, error string")
+            return spark.createDataFrame([], DLQ_SCHEMA)
         raw = (
-            spark.read.schema("id string, error string")
+            spark.read.schema(DLQ_SCHEMA)
             .option("recursiveFileLookup", "true")  # member-* subtrees
             .parquet(self.dlq_dir)
         )

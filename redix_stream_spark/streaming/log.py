@@ -12,6 +12,10 @@ Ordering: ids carry (ms, seq) numeric columns so consumers order by
 ``(ms, seq)`` — string comparison on the dashed form would misorder
 (``"100-2" < "99-1"`` lexicographically; Redis compares numerically).
 
+Write path: a produce batch is built on the driver as one Arrow table
+(``local_frame``), which Spark plans as a JVM ``LocalTableScan`` — no
+Python-worker scan — and written by Spark's parquet writer as one file.
+
 Scale notes: one parquet file per produce batch is the single-writer
 append model (the reference's Redis server is a single-writer log too).
 At 100 TB the log would be a date/hour-partitioned table with the same
@@ -25,8 +29,10 @@ import os
 import time
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     LongType,
     MapType,
@@ -53,6 +59,27 @@ def _stringify(payload: dict) -> dict[str, str]:
     """Reference semantics: every key/value is coerced to a string
     (stream.ex:16-17,30)."""
     return {str(k): str(v) for k, v in payload.items()}
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """A DataFrame over driver-built ``rows`` (tuples in ``schema`` field
+    order; dict values fill map columns; zero rows allowed).
+
+    The rows travel as one Arrow table, which Spark plans as a JVM
+    ``LocalTableScan`` whatever ``spark.sql.execution.arrow.pyspark.enabled``
+    says. ``createDataFrame(<list>)`` plans a Python-RDD scan instead, so
+    every action on it starts Python workers — on a warm 4-core session a
+    200-row produce took 1.28 s that way against 0.25 s from Arrow
+    (CLAUDE.md). The Arrow schema is derived from ``schema``, never
+    written twice.
+    """
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 class EventLog:
@@ -98,7 +125,7 @@ class EventLog:
             (ms, base + i, f"{ms}-{base + i}", _stringify(p))
             for i, p in enumerate(payloads)
         ]
-        df = spark.createDataFrame(rows, MESSAGE_SCHEMA)
+        df = local_frame(spark, rows, MESSAGE_SCHEMA)
         # coalesce(1): a produce batch is one append, like one XADD pipeline.
         df.coalesce(1).write.mode("append").parquet(self.path)
         self._cursor = (ms, base + len(payloads) - 1)

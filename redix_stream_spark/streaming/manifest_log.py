@@ -61,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .commit import GenerationState
-from .log import MESSAGE_SCHEMA, _stringify
+from .log import MESSAGE_SCHEMA, _stringify, local_frame
 
 
 class ManifestEventLog:
@@ -155,7 +155,7 @@ class ManifestEventLog:
             (ms, base + i, f"{ms}-{base + i}", _stringify(p))
             for i, p in enumerate(payloads)
         ]
-        df = spark.createDataFrame(rows, MESSAGE_SCHEMA).coalesce(1)
+        df = local_frame(spark, rows, MESSAGE_SCHEMA).coalesce(1)
         entry = self._write_files(df)
         self._commit_manifest(self.manifest() + entry)
         self._cursor = (ms, base + len(payloads) - 1)
