@@ -57,18 +57,25 @@ def perm_params(n: int, seed: int = 1234) -> list[tuple[int, int]]:
 PERM_PARAMS = perm_params(N_PERMS)
 
 
-def shingles(col: Column, k: int = SHINGLE_K) -> Column:
-    """k-word shingles as strings (array per document)."""
-    toks = tokens(col) if isinstance(col, str) else F.split(col, " ")
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+def _spark_shingles(text: str, k: int = SHINGLE_K) -> str:
+    """Spark SQL text of the k-word shingle array of column ``text``."""
+    toks = f"split(`{text}`, ' ')"
+    return (
+        f"transform(sequence(1, greatest(size({toks}) - {k - 1}, 1)), "
+        f"i -> concat_ws(' ', slice({toks}, i, {k})))"
     )
 
 
-def shingle_hash(col: Column) -> Column:
-    """md5-derived 60-bit integer, reduced mod p — identical cross-engine."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long") % MERSENNE_P
+def shingles(text: str, k: int = SHINGLE_K) -> Column:
+    """k-word shingles of column ``text`` as strings (array per document)
+    — one ``F.expr``, not a py4j call per lambda node."""
+    return F.expr(_spark_shingles(text, k))
+
+
+def _spark_shingle_hash(expr: str) -> str:
+    """md5-derived 60-bit integer, reduced mod p — identical cross-engine
+    (the Spark SQL twin of ``_sql_shingle_hash``)."""
+    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT) % {MERSENNE_P}"
 
 
 def _sql_shingle_hash(expr: str) -> str:
@@ -94,18 +101,24 @@ def minhash_signatures(
     """
     if params is None:
         params = PERM_PARAMS
-    sh = F.array_distinct(shingles(F.col(text_col)))
-    xs = F.transform(sh, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long") % MERSENNE_P)
     # Materialize the hashed-shingle array ONCE as a column: every min-perm
     # expression reads it. (Inlining xs into each would re-shingle and
     # re-md5 the document #perms× — Catalyst's CollapseProject keeps a
     # non-cheap multi-referenced projection separate, so this stays one
-    # evaluation per row.)
-    hashed = docs.select("doc_id", xs.alias("xs"))
+    # evaluation per row.) Each column is one F.expr: the literals type
+    # exactly as F.lit types them (INT below 2^31), and the JVM parses
+    # each column once instead of taking a py4j call per lambda node.
+    hashed = docs.select(
+        "doc_id",
+        F.expr(
+            f"transform(array_distinct({_spark_shingles(text_col)}), "
+            f"s -> {_spark_shingle_hash('s')}) AS xs"
+        ),
+    )
     cols = [
-        F.array_min(
-            F.transform(F.col("xs"), lambda x: (F.lit(a) * x + F.lit(b)) % MERSENNE_P)
-        ).alias(f"mh{i}")
+        F.expr(
+            f"array_min(transform(xs, x -> ({a} * x + {b}) % {MERSENNE_P})) AS mh{i}"
+        )
         for i, (a, b) in enumerate(params)
     ]
     return hashed.select("doc_id", *cols)
@@ -223,7 +236,7 @@ def exact_jaccard(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """
     spark = docs.sparkSession
     sets_src = docs.select(
-        "doc_id", F.array_distinct(shingles(F.col("text"))).alias("sset")
+        "doc_id", F.array_distinct(shingles("text")).alias("sset")
     )
     root = _sset_scratch()
     sets_src.write.mode("overwrite").parquet(root)
@@ -232,7 +245,8 @@ def exact_jaccard(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     # undercounts array columns — at 10× docs AQE would pick a broadcast
     # of the sets side and blow driver memory (measured in SCALING.md).
     # A shuffled hash join keys on doc_id and streams the arrays.
-    sets = spark.read.parquet(root).hint("shuffle_hash")
+    # The known schema skips the footer-inference job a bare read runs.
+    sets = spark.read.schema(sets_src.schema).parquet(root).hint("shuffle_hash")
     return (
         pairs.join(sets.withColumnRenamed("doc_id", "doc_id_a").withColumnRenamed("sset", "set_a"), "doc_id_a")
         .join(sets.withColumnRenamed("doc_id", "doc_id_b").withColumnRenamed("sset", "set_b"), "doc_id_b")
@@ -1116,7 +1130,7 @@ def q100_dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     sh = d.select(
-        "doc_id", F.explode(F.array_distinct(shingles(F.col("text")))).alias("shingle")
+        "doc_id", F.explode(F.array_distinct(shingles("text"))).alias("shingle")
     )
     df_counts = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("nd"))
     shared = F.sum(F.when(F.col("nd") >= 2, 1).otherwise(0))
@@ -1182,11 +1196,11 @@ def q84_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval_docs = d.filter(F.col("doc_id") % 100 == 0)
     corpus = d.filter(F.col("doc_id") % 100 != 0)
     eval_grams = (
-        eval_docs.select(F.explode(F.array_distinct(shingles(F.col("text")))).alias("shingle"))
+        eval_docs.select(F.explode(F.array_distinct(shingles("text"))).alias("shingle"))
         .distinct()
     )
     grams = corpus.select(
-        "doc_id", F.explode(F.array_distinct(shingles(F.col("text")))).alias("shingle")
+        "doc_id", F.explode(F.array_distinct(shingles("text"))).alias("shingle")
     )
     hit = F.count(F.col("e_shingle"))
     return (
@@ -1280,7 +1294,7 @@ def q107_containment_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     sets = d.select(
-        "doc_id", F.array_distinct(shingles(F.col("text"))).alias("ss")
+        "doc_id", F.array_distinct(shingles("text")).alias("ss")
     ).withColumn("sz", F.size("ss"))
     posts_all = sets.select("doc_id", "sz", F.explode("ss").alias("shingle"))
     # df per shingle via groupBy (map-side partials — skew-free however
@@ -1459,7 +1473,7 @@ def q107b_containment_budgeted(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the one a 100 TB corpus runs (the q41/q41b pairing, applied
     to containment)."""
     d = load_table(spark, sf_dir, "documents")
-    hs = F.array_distinct(F.transform(shingles(F.col("text")), _h60))
+    hs = F.array_distinct(F.transform(shingles("text"), _h60))
     posts = (
         d.select("doc_id", hs.alias("hs"))
         .select(
@@ -1741,7 +1755,7 @@ def q116_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     eval_grams = (
         d.filter(F.col("doc_id") % 100 == 0)
-        .select(F.explode(F.array_distinct(shingles(F.col("text")))).alias("shingle"))
+        .select(F.explode(F.array_distinct(shingles("text"))).alias("shingle"))
         .distinct()
     )
     set_positions = [
@@ -1768,7 +1782,7 @@ def q116_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ship_package(spark)
     grams = d.filter(F.col("doc_id") % 100 != 0).select(
-        "doc_id", F.explode(F.array_distinct(shingles(F.col("text")))).alias("shingle")
+        "doc_id", F.explode(F.array_distinct(shingles("text"))).alias("shingle")
     )
     candidates = grams.filter(
         bloom_hit(*_bloom_pos_cols(F.col("shingle")))
@@ -2060,13 +2074,13 @@ def q130_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     dups = q.groupBy("source", "fp").agg(F.count(F.lit(1)).alias("n_same"))
     eval_grams = (
         d.filter(F.col("doc_id") % 100 == 0)
-        .select(F.explode(F.array_distinct(shingles(F.col("text")))).alias("shingle"))
+        .select(F.explode(F.array_distinct(shingles("text"))).alias("shingle"))
         .distinct()
     )
     contaminated = (
         d.filter(F.col("doc_id") % 100 != 0)
         .select(
-            "doc_id", F.explode(F.array_distinct(shingles(F.col("text")))).alias("shingle")
+            "doc_id", F.explode(F.array_distinct(shingles("text"))).alias("shingle")
         )
         .join(F.broadcast(eval_grams), "shingle", "left_semi")
         .select("doc_id")
@@ -2493,7 +2507,7 @@ def q201_cluster_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sets = (
         d.select(
-            "doc_id", F.array_distinct(shingles(F.col("text"))).alias("sset")
+            "doc_id", F.array_distinct(shingles("text")).alias("sset")
         )
         .cache()
         .hint("shuffle_hash")

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from .similarity import dot, norm
+from .similarity import _spark_proj, dot, norm
 
 #: Demo-scale defaults: 4 bits → 16 buckets over the 500-vector sf0.01
 #: table (~31 vectors/bucket). A real corpus raises bits to keep buckets
@@ -68,18 +68,15 @@ def sem_planes(bits: int = SEM_BITS, dim: int = EMB_DIM) -> list[list[int]]:
     return [[_plane_coef(b, i) for i in range(dim)] for b in range(bits)]
 
 
-def _proj(col: Column, plane: list[int]) -> Column:
-    """Left-fold dot of the embedding with an integer literal plane."""
-    return dot(col, F.array(*[F.lit(float(c)) for c in plane]))
-
-
-def semantic_bucket(col: Column, planes: list[list[int]]) -> Column:
-    """Packed sign bits of the hyperplane projections, as BIGINT."""
-    out = None
-    for i, plane in enumerate(planes):
-        bit = F.when(_proj(col, plane) > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        out = bit if out is None else out + bit
-    return out.cast("long")
+def semantic_bucket(vec: str, planes: list[list[int]]) -> Column:
+    """Packed sign bits of the hyperplane projections of column ``vec``,
+    as BIGINT — one ``F.expr`` (see ``similarity._spark_proj``)."""
+    bits = " + ".join(
+        f"CASE WHEN {_spark_proj(vec, [float(c) for c in plane])} > 0 "
+        f"THEN {1 << i} ELSE 0 END"
+        for i, plane in enumerate(planes)
+    )
+    return F.expr(f"CAST({bits} AS BIGINT)")
 
 
 def semantic_dedup(
@@ -96,7 +93,7 @@ def semantic_dedup(
     tagged = emb.select(
         "vec_id",
         "embedding",
-        semantic_bucket(F.col("embedding"), planes).alias("bucket"),
+        semantic_bucket("embedding", planes).alias("bucket"),
         norm(F.col("embedding")).alias("nrm"),
     )
     a = tagged.alias("a")
@@ -227,7 +224,7 @@ def semantic_decontaminate(
         return df.select(
             "vec_id",
             "embedding",
-            semantic_bucket(F.col("embedding"), planes).alias("bucket"),
+            semantic_bucket("embedding", planes).alias("bucket"),
             norm(F.col("embedding")).alias("nrm"),
         )
 

@@ -59,6 +59,23 @@ def _sql_proj(vec: str, plane: list[float]) -> str:
     )
 
 
+def _spark_array(vals: list[float]) -> str:
+    """A Spark SQL ``array<double>`` literal: a ``D``-suffixed ``repr``
+    parses back bit-exactly (subnormals and -0.0 included)."""
+    return "array(" + ", ".join(f"{v!r}D" for v in vals) + ")"
+
+
+def _spark_proj(vec: str, plane: list[float]) -> str:
+    """Spark SQL twin of ``_sql_proj``: the same left fold over the same
+    ``repr`` literals. Built as text so a projection costs one ``F.expr``
+    — the JVM parses it once — instead of one py4j call per coefficient
+    and per lambda node."""
+    return (
+        f"aggregate(zip_with(`{vec}`, {_spark_array(plane)}, "
+        f"(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, x) -> acc + x)"
+    )
+
+
 Q40_SQL = f"""
 WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
 SELECT vec_id, label, sim, rank FROM (
@@ -225,13 +242,14 @@ def _hyperplanes(
 
 
 def lsh_table_buckets(
-    col: Column,
+    vec: str,
     planes: list[list[float]],
     tables: int = LSH_TABLES,
     bits: int = LSH_BITS,
     stride: int | None = None,
 ) -> list[Column]:
-    """One bucket id per table: sign bits of the k projections, packed.
+    """One bucket id per table over column ``vec``: sign bits of the k
+    projections, packed — one ``F.expr`` per table.
 
     ``stride`` is the plane-index stride — plane(t, i) = planes[t*stride+i].
     The demo faces use stride == bits (a dense plane list); the production
@@ -240,30 +258,17 @@ def lsh_table_buckets(
     per (t, i), so the mapping must be width-independent)."""
     if stride is None:
         stride = bits
-
-    def proj(plane: list[float]) -> Column:
-        return F.aggregate(
-            F.zip_with(
-                col,
-                F.array([F.lit(v) for v in plane]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+    return [
+        F.expr(
+            " + ".join(
+                f"CASE WHEN {_spark_proj(vec, planes[t * stride + i])} > 0 "
+                f"THEN CAST({1 << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+                for i in range(bits)
+            )
+            + f" AS bucket{t}"
         )
-
-    buckets = []
-    for t in range(tables):
-        bit_cols = [
-            F.when(proj(planes[t * stride + i]) > 0, F.lit(1 << i).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-            for i in range(bits)
-        ]
-        out = bit_cols[0]
-        for b in bit_cols[1:]:
-            out = out + b
-        buckets.append(out.alias(f"bucket{t}"))
-    return buckets
+        for t in range(tables)
+    ]
 
 
 def _demo_lsh_sql_ctes(carry: str = "") -> str:
@@ -344,7 +349,7 @@ def q42_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     planes = _hyperplanes()
     e = load_table(spark, sf_dir, "embeddings")
-    tagged = e.select("vec_id", "label", "embedding", *lsh_table_buckets(F.col("embedding"), planes))
+    tagged = e.select("vec_id", "label", "embedding", *lsh_table_buckets("embedding", planes))
     # (vec, table, bucket) — explode the L bucket ids.
     entries = tagged.select(
         "vec_id",
@@ -508,7 +513,7 @@ def _prod_lsh_entries(e: DataFrame) -> DataFrame:
     tagged = e.select(
         "vec_id",
         *lsh_table_buckets(
-            F.col("embedding"),
+            "embedding",
             planes,
             tables=PROD_LSH_TABLES,
             bits=bits,
@@ -537,7 +542,7 @@ def _demo_lsh_entries(e: DataFrame) -> DataFrame:
     LSH_BITS) — q169/q174's bucket relation; lazily localCheckpointed
     for the same reason as ``_prod_lsh_entries``."""
     tagged = e.select(
-        "vec_id", *lsh_table_buckets(F.col("embedding"), _hyperplanes())
+        "vec_id", *lsh_table_buckets("embedding", _hyperplanes())
     )
     return tagged.select(
         "vec_id",

@@ -65,7 +65,7 @@ class StreamingSemanticDedup:
         spark = batch.sparkSession
         tagged = batch.select(
             "vec_id",
-            semantic_bucket(F.col("embedding"), self.planes).alias("bucket"),
+            semantic_bucket("embedding", self.planes).alias("bucket"),
             norm(F.col("embedding")).alias("nrm"),
             "embedding",
         )

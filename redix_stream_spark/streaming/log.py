@@ -114,8 +114,11 @@ class EventLog:
         """Append a batch; ids share one millis stamp with consecutive seqs.
 
         Id monotonicity mirrors Redis XADD: the stamp never goes backwards
-        even if the clock does, and seq increments within a stamp.
+        even if the clock does, and seq increments within a stamp. An
+        empty batch returns ``[]`` and writes no file for a consumer to list.
         """
+        if not payloads:
+            return []
         if self._cursor is None:
             self._cursor = self.max_position(spark)
         last_ms, last_seq = self._cursor

@@ -145,7 +145,10 @@ class ManifestEventLog:
     def produce_many(self, spark: SparkSession, payloads: list[dict]) -> list[str]:
         """Append one batch; same id discipline as EventLog.produce_many
         (monotone ms, consecutive seq — stream.ex:29). The batch becomes
-        ONE immutable data file; the manifest commit publishes it."""
+        ONE immutable data file; the manifest commit publishes it. An
+        empty batch returns ``[]`` and commits nothing."""
+        if not payloads:
+            return []
         if self._cursor is None:
             self._cursor = self.max_position()
         last_ms, last_seq = self._cursor

@@ -48,7 +48,7 @@ def main() -> None:
     tagged = e.select(
         "vec_id",
         *S.lsh_table_buckets(
-            F.col("embedding"),
+            "embedding",
             planes,
             tables=S.PROD_LSH_TABLES,
             bits=bits,
@@ -75,7 +75,7 @@ def main() -> None:
     # --- demo width (q174) ---
     dplanes = S._hyperplanes()
     dtagged = e.select(
-        "vec_id", "embedding", *S.lsh_table_buckets(F.col("embedding"), dplanes)
+        "vec_id", "embedding", *S.lsh_table_buckets("embedding", dplanes)
     )
     t("demo tagged (6x5 folds)", dtagged)
     dentries = S._demo_lsh_entries(e)

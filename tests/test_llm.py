@@ -97,7 +97,7 @@ def test_minhash_candidates_recall_against_exact(spark, sf_dir):
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # Ground truth: brute-force shingle Jaccard on all pairs (500 docs OK).
-    sets = d.select("doc_id", F.array_distinct(shingles(F.col("text"))).alias("s"))
+    sets = d.select("doc_id", F.array_distinct(shingles("text")).alias("s"))
     a, b = sets.alias("a"), sets.alias("b")
     inter = F.size(F.array_intersect("a.s", "b.s")).cast("double")
     union = F.size(F.col("a.s")) + F.size(F.col("b.s")) - F.size(

@@ -91,18 +91,16 @@ def test_bucket_is_scale_invariant_and_deterministic(spark):
     planes = sem_planes(SEM_BITS)
     vecs = [[float((i * j) % 13 - 6) for i in range(DIM)] for j in range(1, 9)]
     doubled = [[x * 3.0 for x in v] for v in vecs]
-    from pyspark.sql import functions as F
-
     b1 = [
         r[0]
         for r in _frame(spark, vecs)
-        .select(semantic_bucket(F.col("embedding"), planes))
+        .select(semantic_bucket("embedding", planes))
         .collect()
     ]
     b2 = [
         r[0]
         for r in _frame(spark, doubled)
-        .select(semantic_bucket(F.col("embedding"), planes))
+        .select(semantic_bucket("embedding", planes))
         .collect()
     ]
     assert b1 == b2

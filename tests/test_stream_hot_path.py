@@ -4,6 +4,8 @@ its input once."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from redix_stream_spark.streaming import Consumer, EventLog
@@ -16,6 +18,14 @@ from redix_stream_spark.streaming.log import (
 from redix_stream_spark.streaming.manifest_log import ManifestEventLog
 
 ARROW_CONF = "spark.sql.execution.arrow.pyspark.enabled"
+
+
+def _files(root: str) -> list[str]:
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, names in os.walk(root)
+        for f in names
+    )
 
 
 def _physical_plan(df) -> str:
@@ -47,7 +57,8 @@ def test_local_frame_accepts_zero_rows(spark):
 
 @pytest.mark.parametrize("log_cls", [EventLog, ManifestEventLog])
 def test_produce_many_round_trips_edge_payloads(spark, tmp_path, log_cls):
-    log = log_cls(str(tmp_path / "log"))
+    log_dir = str(tmp_path / "log")
+    log = log_cls(log_dir)
     payloads = [
         {},
         TOMBSTONE,
@@ -55,7 +66,22 @@ def test_produce_many_round_trips_edge_payloads(spark, tmp_path, log_cls):
         {"ключ": "значение", "日本": "語", "emoji": "\U0001f600"},
     ]
     ids = log.produce_many(spark, payloads)
-    assert log.produce_many(spark, []) == []
+    # an empty batch is a no-op: no Spark job, no data file, no manifest
+    # commit for a file-stream consumer to list
+    sc = spark.sparkContext
+    group = f"empty-produce-{log_cls.__name__}"
+    files = _files(log_dir)
+    manifest = log.manifest() if isinstance(log, ManifestEventLog) else None
+    sc.setJobGroup(group, "empty produce_many")
+    try:
+        assert log.produce_many(spark, []) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert _files(log_dir) == files
+    if manifest is not None:
+        assert log.manifest() == manifest
     later = log.produce(spark, {"k": "after-empty"})
     rows = log.read(spark).orderBy("ms", "seq").collect()
     assert [r["id"] for r in rows] == ids + [later]
