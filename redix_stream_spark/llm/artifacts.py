@@ -96,18 +96,21 @@ def corpus_fingerprint(sf_dir: str, table: str = "documents") -> str:
     return h[:16]
 
 
+def _mtime_or_zero(p: str) -> float:
+    """mtime for an LRU sweep; a dir a concurrent session (or tmp
+    cleanup) removed mid-sweep sorts oldest (ADVICE r6)."""
+    try:
+        return os.path.getmtime(p)
+    except OSError:
+        return 0.0
+
+
 def _artifact_root(fingerprint: str) -> str:
     """One dir per corpus fingerprint, bounded at ARTIFACT_KEEP live
     corpora: entering a fingerprint refreshes its mtime and sweeps the
     oldest siblings past the cap (LRU, the ``_scratch`` bounded-disk
     discipline — a rewritten corpus's stale labels age out and can never
     be served anyway, the fingerprint no longer matches)."""
-    def _mtime_or_zero(p: str) -> float:
-        try:
-            return os.path.getmtime(p)
-        except OSError:
-            return 0.0
-
     base = tempfile.gettempdir()
     keep = os.path.join(base, f"{ARTIFACT_PREFIX}{fingerprint}")
     os.makedirs(keep, exist_ok=True)
@@ -119,10 +122,7 @@ def _artifact_root(fingerprint: str) -> str:
             if name.startswith(ARTIFACT_PREFIX)
             and (p := os.path.join(base, name)) != keep
         ),
-        # A concurrent session (or tmp cleanup) can remove a sibling
-        # between the listdir and this stat — missing dirs sort oldest
-        # and the rmtree below is already ignore_errors (ADVICE r6).
-        key=lambda p: _mtime_or_zero(p),
+        key=_mtime_or_zero,
     )
     for p in siblings[: max(0, len(siblings) - (ARTIFACT_KEEP - 1))]:
         shutil.rmtree(p, ignore_errors=True)
@@ -157,7 +157,7 @@ def _tables(spark: SparkSession, sf_dir: str):
         sig = minhash_signatures(d).cache()
         bands = banded_keys(sig)
         pairs = (
-            exact_jaccard(d, lsh_candidate_pairs(sig))
+            exact_jaccard(d, lsh_candidate_pairs(bands))
             .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
             .select("doc_id_a", "doc_id_b")
         )

@@ -155,16 +155,16 @@ def banded_keys(sig: DataFrame, n_bands: int | None = None) -> DataFrame:
     ).localCheckpoint()
 
 
-def lsh_candidate_pairs(sig: DataFrame, n_bands: int | None = None) -> DataFrame:
-    """Band the signatures and self-join band buckets → candidate pairs.
+def lsh_candidate_pairs(banded: DataFrame) -> DataFrame:
+    """Self-join a ``banded_keys`` relation's buckets → candidate pairs.
 
     The only shuffle in the LSH pipeline: band_key is the join key, so
     co-bucketed docs — and nothing else — meet. The join is PINNED
     shuffle_hash: the checkpointed band relation exposes its true
     test-SF size to the planner, which would otherwise auto-broadcast a
     corpus-sized relation (the CLAUDE.md size-estimator trap, in
-    reverse)."""
-    banded = banded_keys(sig, n_bands=n_bands)
+    reverse). Takes the bands, not the signatures, so a caller that
+    also persists or probes the bands computes them once."""
     a = banded.alias("a")
     b = banded.hint("shuffle_hash").alias("b")
     return (
@@ -187,35 +187,49 @@ _SSET_KEEP = 4
 
 def _sset_scratch() -> str:
     """Fresh scratch dir for one exact_jaccard call's shingle-set
-    materialization, bounded like the artifact roots: creating one
-    sweeps the oldest siblings past _SSET_KEEP. Unique per call (never
-    overwritten) because the RETURNED DataFrame is lazy — a later query's
-    overwrite must not delete files an earlier query's action still
-    reads. Per-run recompute, NOT a cross-run cache: the dir name is
-    random, so no later bench/oracle invocation can ever be served by
-    it."""
+    materialization, named ``redix_ssets_<pid>_<random>``. Unique per
+    call (never overwritten) because the RETURNED DataFrame is lazy — a
+    later query's overwrite must not delete files an earlier query's
+    action still reads. Per-run recompute, NOT a cross-run cache.
+
+    Bounded like the artifact roots, but per process: creating one
+    sweeps this process's oldest dirs past _SSET_KEEP, plus dirs whose
+    pid is no longer running or whose name has no pid. Another live
+    session's dirs are never touched — a lazy DataFrame there may still
+    need them. Assumes a single node: the dir is on the driver's local
+    disk and executors write it, which holds in local mode only."""
     import shutil
     import tempfile
     import uuid
 
-    def _mtime_or_zero(p: str) -> float:
+    from .artifacts import _mtime_or_zero
+
+    def _alive(pid: int) -> bool:
         try:
-            return os.path.getmtime(p)
-        except OSError:
-            return 0.0
+            os.kill(pid, 0)
+        except ProcessLookupError:
+            return False
+        except PermissionError:
+            return True
+        return True
 
     base = tempfile.gettempdir()
-    path = os.path.join(base, f"{_SSET_PREFIX}{uuid.uuid4().hex[:12]}")
-    siblings = sorted(
-        (
-            os.path.join(base, name)
-            for name in os.listdir(base)
-            if name.startswith(_SSET_PREFIX)
-        ),
-        key=_mtime_or_zero,
-    )
-    for p in siblings[: max(0, len(siblings) - (_SSET_KEEP - 1))]:
+    me = os.getpid()
+    own, stale = [], []
+    for name in os.listdir(base):
+        if not name.startswith(_SSET_PREFIX):
+            continue
+        p = os.path.join(base, name)
+        head, sep, _ = name[len(_SSET_PREFIX):].partition("_")
+        pid = int(head) if sep and head.isdigit() else None
+        if pid == me:
+            own.append(p)
+        elif pid is None or not _alive(pid):
+            stale.append(p)
+    own.sort(key=_mtime_or_zero)
+    for p in stale + own[: max(0, len(own) - (_SSET_KEEP - 1))]:
         shutil.rmtree(p, ignore_errors=True)
+    path = os.path.join(base, f"{_SSET_PREFIX}{me}_{uuid.uuid4().hex[:12]}")
     os.makedirs(path, exist_ok=True)
     return path
 
@@ -340,7 +354,7 @@ def _minhash_neardup_pipeline(
     # one row of #perms longs per doc) instead of recomputing the md5
     # shingling per branch — halves the pipeline's wall clock.
     sig = minhash_signatures(d, params=params).cache()
-    pairs = lsh_candidate_pairs(sig, n_bands=n_bands)
+    pairs = lsh_candidate_pairs(banded_keys(sig, n_bands))
     scored = exact_jaccard(d, pairs)
     return scored.filter(F.col("jaccard") >= JACCARD_THRESHOLD)
 
@@ -554,12 +568,25 @@ def simhash_near_dup_pairs(
             f"effectively O(n²). Use hamming_max<=6, or pass "
             f"allow_narrow_chunks=True for small corpora."
         )
+    return hamming_banded_pairs(
+        simhash_frame(d, weighted=weighted), "simhash", hamming_max
+    )
+
+
+def hamming_banded_pairs(
+    hashes: DataFrame, hash_col: str, hamming_max: int
+) -> DataFrame:
+    """(doc_id_a, doc_id_b, hamming) for every pair of 60-bit hashes in
+    ``hashes`` (doc_id, ``hash_col``) within ``hamming_max`` bits, by the
+    two-chunk combination keys described in simhash_near_dup_pairs. The
+    one banding kernel of the SimHash text path and the dHash image path
+    (q162/q162b); callers check the chunk width, whose floor differs."""
+    n_chunks = hamming_max + 2
     bounds = [SIMHASH_BITS * i // n_chunks for i in range(n_chunks + 1)]
     widths = [bounds[i + 1] - bounds[i] for i in range(n_chunks)]
-    sh = simhash_frame(d, weighted=weighted)
 
     def _cv(i):
-        return F.shiftright("simhash", bounds[i]).bitwiseAND(
+        return F.shiftright(hash_col, bounds[i]).bitwiseAND(
             F.lit((1 << widths[i]) - 1)
         )
 
@@ -572,18 +599,26 @@ def simhash_near_dup_pairs(
             (i, j) for i in range(n_chunks) for j in range(i + 1, n_chunks)
         )
     ]
-    chunks = sh.select(
-        "doc_id", "simhash", F.explode(F.array(*chunk_structs)).alias("c")
-    ).select("doc_id", "simhash", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"))
+    chunks = (
+        hashes.select(
+            "doc_id", hash_col, F.explode(F.array(*chunk_structs)).alias("c")
+        )
+        .select(
+            "doc_id", hash_col, F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv")
+        )
+        # corpus-sized at production (n x C(c,2) rows): pin the shuffle
+        # join so the plan doesn't flip from a test-SF broadcast accident
+        .hint("shuffle_hash")
+    )
     a, b = chunks.alias("a"), chunks.alias("b")
     # Verify inside the join projection, filter, THEN dedupe (round 11,
     # the q162b lesson): the raw candidate relation is
-    # O(n_chunks · n² / 2^chunk_width) rows and a .distinct() there is
-    # the dominant shuffle at corpus scale; hamming is a pure function
-    # of the pair, so filter-then-distinct is value-identical and the
-    # dedupe only ever sees true near-dup pairs.
+    # O(n_chunks · n² / 2^chunk_width) rows and a .distinct() there was
+    # the dominant 100x shuffle (q162b 82.9 s); hamming is a pure
+    # function of the pair, so filter-then-distinct is value-identical
+    # and the dedupe only ever sees true near-dup pairs.
     hamming = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
+        F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
     ).cast("long")
     return (
         a.join(
@@ -657,7 +692,7 @@ def neardup_clusters(d: DataFrame) -> DataFrame:
     q80_neardup_clusters for the algorithm and scale notes)."""
     sig = minhash_signatures(d).cache()
     pairs = (
-        exact_jaccard(d, lsh_candidate_pairs(sig))
+        exact_jaccard(d, lsh_candidate_pairs(banded_keys(sig)))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_id_a", "doc_id_b")
     )
@@ -770,7 +805,7 @@ def q80b_neardup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     sig = minhash_signatures(d).cache()
     pairs = (
-        exact_jaccard(d, lsh_candidate_pairs(sig))
+        exact_jaccard(d, lsh_candidate_pairs(banded_keys(sig)))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_id_a", "doc_id_b")
     )

@@ -1255,7 +1255,7 @@ _register_q155b()
 # The dedup family (q36/q38/q80/...) extended to the image modality:
 # a 60-bit difference hash (dHash) computed from actually-decoded PNG
 # pixels, then the same pigeonhole chunk-banding + exact Hamming verify
-# the SimHash text path uses (dedup.py::simhash_near_dup_pairs).
+# the SimHash text path uses (dedup.py::hamming_banded_pairs).
 # ---------------------------------------------------------------------------
 
 #: dHash grid: 8 rows x 9 columns of sampled gray values -> 64 horizontal
@@ -1444,95 +1444,32 @@ def image_near_dup_pairs_fast(
 
 
 def _dhash_banded_pairs(hashes: DataFrame, hamming_max: int) -> DataFrame:
-    """Pigeonhole chunk banding + exact Hamming verify over a
-    (doc_id, dhash) relation — shared by the exact and thumbnail paths.
+    """``dedup.hamming_banded_pairs`` over a (doc_id, dhash) relation —
+    shared by the exact and thumbnail paths.
 
     The chunk self-join would otherwise recompute the hash stage — the
     Python image decode, the expensive part — once PER BRANCH (Spark
     never reuses self-join subtrees, the r10 q107b lesson), so the
     narrow (doc_id, dhash) relation (16 B/row) is localCheckpointed
     ONCE and both branches derive from it: measured at sf0.1 — q162
-    16.6 s → 8.3 s, q162b 8.9 s → 5.2 s.
+    16.6 s → 8.3 s, q162b 8.9 s → 5.2 s. Two-chunk combination keys
+    (vs single-chunk) took the 500k-image 100x replica from 1.78
+    BILLION raw candidates (47 s to enumerate) off the critical path."""
+    from .dedup import hamming_banded_pairs
 
-    Candidate keys are 2-CHUNK COMBINATIONS (Manku/Jain/Sarma WWW'07,
-    the "multi-chunk combination keys" fix the SimHash docstring cites):
-    split the hash into ``hamming_max + 2`` chunks — ≤hamming_max errors
-    hit ≤hamming_max chunks, leaving ≥2 clean, so SOME pair of chunks
-    agrees and keying on every C(c,2) pair is still a complete candidate
-    generator (recall 1.0 by pigeonhole) — but the key is now two chunks
-    wide (~20 bits vs 12), collapsing candidate volume by the extra
-    chunk's cardinality: single-chunk keys measured 1.78 BILLION raw
-    candidates on the 500k-image 100x replica (the dominant cost, 47 s
-    to enumerate); combination keys make the same verified pair set with
-    the join no longer the bottleneck."""
     # eager=False (ADVICE r11): the checkpoint still materializes exactly
     # once at the FIRST action and is shared by both self-join branches,
     # but plan-only consumers (gen_plans.py explain capture) no longer pay
     # the full corpus decode just to build the DataFrame.
     hashes = hashes.localCheckpoint(eager=False)
-    n_chunks = hamming_max + 2
-    chunk_width = DHASH_BITS // n_chunks
+    chunk_width = DHASH_BITS // (hamming_max + 2)
     if chunk_width < 8:
         raise ValueError(
             f"hamming_max={hamming_max} needs chunks of {chunk_width} bits; "
             "per-chunk cardinality below 2^8 makes the candidate join "
             "effectively O(n^2) (see simhash_near_dup_pairs)."
         )
-    bounds = [DHASH_BITS * i // n_chunks for i in range(n_chunks + 1)]
-    widths = [bounds[i + 1] - bounds[i] for i in range(n_chunks)]
-
-    def _cv(i):
-        return F.shiftright("dhash", bounds[i]).bitwiseAND(
-            F.lit((1 << widths[i]) - 1)
-        )
-
-    chunk_structs = [
-        F.struct(
-            F.lit(k).alias("ci"),
-            (_cv(i) * F.lit(1 << widths[j]) + _cv(j)).alias("cv"),
-        )
-        for k, (i, j) in enumerate(
-            (i, j)
-            for i in range(n_chunks)
-            for j in range(i + 1, n_chunks)
-        )
-    ]
-    chunks = (
-        hashes.select(
-            "doc_id", "dhash", F.explode(F.array(*chunk_structs)).alias("c")
-        )
-        .select(
-            "doc_id", "dhash", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv")
-        )
-        # corpus-sized at production (n x C(c,2) rows): pin the shuffle
-        # join so the plan doesn't flip from a test-SF broadcast accident
-        .hint("shuffle_hash")
-    )
-    a, b = chunks.alias("a"), chunks.alias("b")
-    # Hamming-verify INSIDE the join projection and filter BEFORE the
-    # dedupe: the raw candidate relation is O(n²/2^chunk_width) rows at
-    # corpus scale, and a .distinct() there was the dominant 100x shuffle
-    # (measured round 11: q162b 82.9 s → the verify is one codegen'd
-    # bit_count, so the distinct now sees only true near-dup pairs —
-    # bounded by the planted group density, shuffle-trivial).
-    hamming = F.bit_count(
-        F.col("a.dhash").bitwiseXOR(F.col("b.dhash"))
-    ).cast("long")
-    return (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= hamming_max)
-        .distinct()
-    )
+    return hamming_banded_pairs(hashes, "dhash", hamming_max)
 
 
 def _synth_blobs(spark: SparkSession, sf_dir: str, synth_fn) -> DataFrame:

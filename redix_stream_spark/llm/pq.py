@@ -237,7 +237,7 @@ def pq_topk(
     whose probe scan is codes-only and plan-asserted). Both ranking
     stages are TakeOrdered — never a global sort.
     """
-    from .similarity import cosine
+    from .similarity import _spark_array, cosine
     from ..session import ship_package
 
     m, _kc, dsub = books.shape
@@ -278,7 +278,7 @@ def pq_topk(
     ship_package(emb.sparkSession)
     scored = src.mapInPandas(score, "vec_id long, approx_sim double")
     short = scored.orderBy(F.desc("approx_sim"), "vec_id").limit(shortlist)
-    qlit = F.array(*[F.lit(float(x)) for x in q])
+    qlit = F.expr(_spark_array([float(x) for x in q]))
     reranked = (
         short.join(emb.select("vec_id", "label", "embedding"), "vec_id")
         .select(
@@ -449,14 +449,14 @@ class IvfPqIndex:
         shortlist: int = 50,
         exclude_id: int | None = None,
     ) -> DataFrame:
-        from .similarity import cosine
+        from .similarity import _spark_array, cosine
 
         scored = self.adc_scored(spark, qv, nprobe)
         if exclude_id is not None:
             scored = scored.filter(F.col("vec_id") != exclude_id)
         short = scored.orderBy(F.desc("approx_sim"), "vec_id").limit(shortlist)
         q = _normalize(np.asarray(qv, dtype=np.float64))
-        qlit = F.array(*[F.lit(float(x)) for x in q])
+        qlit = F.expr(_spark_array([float(x) for x in q]))
         return (
             short.join(
                 self._index(spark).select("vec_id", "label", "embedding"),
@@ -521,7 +521,7 @@ def sq8_topk(
     the final order is exact cosine.
     """
     from ..session import ship_package
-    from .similarity import cosine
+    from .similarity import _spark_array, cosine
 
     span = (hi - lo) / 255.0
     q = _normalize(np.asarray(query_vec, dtype=np.float64))
@@ -547,7 +547,7 @@ def sq8_topk(
     if exclude_id is not None:
         scored = scored.filter(F.col("vec_id") != exclude_id)
     short = scored.orderBy(F.desc("approx_sim"), "vec_id").limit(shortlist)
-    qlit = F.array(*[F.lit(float(x)) for x in q])
+    qlit = F.expr(_spark_array([float(x) for x in q]))
     reranked = (
         short.join(emb.select("vec_id", "label", "embedding"), "vec_id")
         .select("vec_id", "label", cosine(F.col("embedding"), qlit).alias("sim"))

@@ -46,12 +46,39 @@ from pyspark.sql import functions as F
 from .dedup import (
     PROD_BANDS,
     PROD_PERM_PARAMS,
+    _sym_edges,
+    banded_keys,
     lsh_candidate_pairs,
     minhash_signatures,
+    propagate_min_labels,
 )
 
 
-class StreamingNearDupFilter:
+class _PathIndexedFilter:
+    """Plumbing both stream filters share: the path-mode index's live
+    generation dir and the foreachBatch attachment."""
+
+    def _index_dir(self) -> str:
+        """Current generation dir for the path-mode index (committed on
+        first use so appends always have a live target)."""
+        if self._index_state.current_gen() is None:
+            gen, _ = self._index_state.stage()
+            self._index_state.commit(gen)
+        return self._index_state.current_dir()
+
+    def run(self, doc_stream: DataFrame, checkpoint_dir: str, **trigger):
+        """Attach to a streaming (doc_id, text) DataFrame; returns the
+        StreamingQuery. Default trigger drains what is available."""
+        trigger = trigger or {"availableNow": True}
+        return (
+            doc_stream.writeStream.foreachBatch(self.apply_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(**trigger)
+            .start()
+        )
+
+
+class StreamingNearDupFilter(_PathIndexedFilter):
     """Incremental MinHash near-dup filter with a durable band index.
 
     ``accepted_path`` receives accepted (doc_id, text) rows;
@@ -100,14 +127,6 @@ class StreamingNearDupFilter:
 
     # -- the per-batch step (also usable on a static batch) -------------
 
-    def _index_dir(self) -> str:
-        """Current generation dir for the path-mode index (committed on
-        first use so appends always have a live target)."""
-        if self._index_state.current_gen() is None:
-            gen, _ = self._index_state.stage()
-            self._index_state.commit(gen)
-        return self._index_state.current_dir()
-
     def _claimed(self, spark: SparkSession) -> DataFrame:
         if self.index_table is not None:
             if spark.catalog.tableExists(self.index_table):
@@ -136,8 +155,8 @@ class StreamingNearDupFilter:
         """Dedup one (micro-)batch of (doc_id, text) against the index."""
         spark = batch.sparkSession
         docs = batch.select("doc_id", "text")
-        sig = minhash_signatures(docs, params=self.params).cache()
-        bands = _band_keys(sig, self.n_bands)
+        sig = minhash_signatures(docs, params=self.params)
+        bands = banded_keys(sig, self.n_bands)
 
         # 2. cross-batch: any claimed band → near-dup of accepted history.
         hit = (
@@ -149,10 +168,17 @@ class StreamingNearDupFilter:
 
         # 3. intra-batch: q80's min-label collapse over shared bands,
         # restricted to the batch (candidate pairs from band equality —
-        # the LSH decision, no O(n²) verify needed to *cluster*).
-        fresh_sig = sig.join(fresh.select("doc_id"), "doc_id")
-        pairs = lsh_candidate_pairs(fresh_sig, n_bands=self.n_bands)
-        non_canonical = _non_canonical(pairs)
+        # the LSH decision, no O(n²) verify needed to *cluster*). Band
+        # keys are per-doc, so the fresh docs' bands are a semi-join of
+        # the batch's, not a second banding.
+        pairs = lsh_candidate_pairs(
+            bands.join(fresh.select("doc_id"), "doc_id", "left_semi")
+        )
+        non_canonical = (
+            propagate_min_labels(_sym_edges(pairs))
+            .filter(F.col("is_canonical") == 0)
+            .select("doc_id")
+        )
         accepted = fresh.join(non_canonical, "doc_id", "left_anti").cache()
 
         # 4. accepted rows land, THEN the band claims. Order is
@@ -181,22 +207,10 @@ class StreamingNearDupFilter:
                 "band_key", F.col("doc_id").alias("owner")
             )
         )
-        sig.unpersist()
         fresh.unpersist()
         accepted.unpersist()
 
     # -- streaming face --------------------------------------------------
-
-    def run(self, doc_stream: DataFrame, checkpoint_dir: str, **trigger):
-        """Attach to a streaming (doc_id, text) DataFrame; returns the
-        StreamingQuery. Default trigger drains what is available."""
-        trigger = trigger or {"availableNow": True}
-        return (
-            doc_stream.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(**trigger)
-            .start()
-        )
 
     def accepted(self, spark: SparkSession) -> DataFrame:
         """Accepted corpus so far (deduped by doc_id — epoch replays may
@@ -255,84 +269,13 @@ class StreamingNearDupFilter:
         return n
 
 
-def _band_keys(sig: DataFrame, n_bands: int) -> DataFrame:
-    """(doc_id, band_key) rows for a signature frame — the same band
-    construction as ``lsh_candidate_pairs`` (llm/dedup.py), exposed flat."""
-    n_perms = sum(1 for c in sig.columns if c.startswith("mh"))
-    rows_per_band = n_perms // n_bands
-    bands = [
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.lit(j),
-                *[F.col(f"mh{j * rows_per_band + r}") for r in range(rows_per_band)],
-            )
-        ).alias(f"band{j}")
-        for j in range(n_bands)
-    ]
-    return sig.select("doc_id", F.explode(F.array(*bands)).alias("band_key"))
-
-
-def _non_canonical(pairs: DataFrame) -> DataFrame:
-    """doc_ids that are NOT their cluster's minimum, per q80's min-label
-    propagation run to a fixed point on the (batch-local) pair graph."""
-    edges = (
-        pairs.select(F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst"))
-        .unionByName(
-            pairs.select(
-                F.col("doc_id_b").alias("src"), F.col("doc_id_a").alias("dst")
-            )
-        )
-        .cache()
-    )
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .cache()
-    )
-    for _ in range(20):
-        from_neighbors = (
-            edges.join(labels, edges.src == labels.doc_id)
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("label").alias("nlabel"))
-        )
-        # cache each round (the q80 pattern): without it, round r's
-        # lineage recomputes rounds 1..r-1 from scratch.
-        new_labels = (
-            labels.join(from_neighbors, "doc_id", "left_outer")
-            .select(
-                "doc_id",
-                F.least(F.col("label"), F.coalesce("nlabel", F.col("label"))).alias(
-                    "label"
-                ),
-            )
-            .cache()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError("intra-batch label propagation did not converge")
-    edges.unpersist()
-    return labels.filter(F.col("doc_id") != F.col("label")).select("doc_id")
-
-
 def _has_parquet(path: str) -> bool:
     return os.path.isdir(path) and any(
         f.endswith(".parquet") for f in os.listdir(path)
     )
 
 
-class StreamingExactSubstrScrubber:
+class StreamingExactSubstrScrubber(_PathIndexedFilter):
     """Incremental exact-substring dedup (E168's q211/q211b made
     streaming, E169): each arriving batch of (doc_id, text) gets its
     ExactSubstr cut-list report — duplicated spans vs everything seen in
@@ -396,12 +339,6 @@ class StreamingExactSubstrScrubber:
         self._staging_dir = report_path.rstrip("/") + "_staging"
 
     # -- index plumbing (path mode, as StreamingNearDupFilter) ----------
-
-    def _index_dir(self) -> str:
-        if self._index_state.current_gen() is None:
-            gen, _ = self._index_state.stage()
-            self._index_state.commit(gen)
-        return self._index_state.current_dir()
 
     def _claimed(self, spark: SparkSession) -> DataFrame:
         if not _has_parquet(self._index_dir()):
@@ -513,16 +450,6 @@ class StreamingExactSubstrScrubber:
         shutil.rmtree(staging, ignore_errors=True)
 
     # -- streaming face --------------------------------------------------
-
-    def run(self, doc_stream: DataFrame, checkpoint_dir: str, **trigger):
-        """Attach to a streaming (doc_id, text) DataFrame."""
-        trigger = trigger or {"availableNow": True}
-        return (
-            doc_stream.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(**trigger)
-            .start()
-        )
 
     def report(self, spark: SparkSession) -> DataFrame:
         """Cut-list rows so far: one row per (doc_id, batch) — a

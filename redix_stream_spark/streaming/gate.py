@@ -300,12 +300,10 @@ def _register_q208() -> None:
         itself reads ONE jsonl line per quarantined epoch (bounded
         metadata, the consumer-watermark class) and never touches the
         quarantined parquet payloads."""
-        import shutil
-        import tempfile
-
         from ..catalog import load_table
+        from ..sources.ingest import _scratch
 
-        root = os.path.join(tempfile.gettempdir(), "redix_q208_gate")
+        root = _scratch("q208_gate_")
         shutil.rmtree(root, ignore_errors=True)
         # min_words tolerance scales with the corpus (bounded 1-row count;
         # see Q208_MINW_FLOOR note): the violation count it bounds is

@@ -216,10 +216,9 @@ GROUP BY CAST(date_trunc('hour', ts) AS TIMESTAMP), event_type
 
 
 def _register_query() -> None:
-    import tempfile
-
     from ..catalog import load_table
     from ..registry import register
+    from ..sources.ingest import _scratch
 
     @register("q105_matview_rollup", Q105_SQL)
     def q105_matview_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -233,7 +232,9 @@ def _register_query() -> None:
         must be *invisible* in the result.
         """
         e = load_table(spark, sf_dir, "events")
-        mv = StreamingMatView(tempfile.mkdtemp(prefix="q105_matview_"))
+        root = _scratch("q105_matview_")
+        shutil.rmtree(root, ignore_errors=True)
+        mv = StreamingMatView(root)
         for i in range(3):
             mv.update(e.filter(F.col("event_id") % 4 == i), epoch_id=i)
         mv.compact(spark)
@@ -358,10 +359,9 @@ GROUP BY user_id
 
 
 def _register_latest_query() -> None:
-    import tempfile
-
     from ..catalog import load_table
     from ..registry import register
+    from ..sources.ingest import _scratch
 
     @register("q106_latest_state", Q106_SQL)
     def q106_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -374,7 +374,9 @@ def _register_latest_query() -> None:
         never a per-key row_number window over the raw log.
         """
         e = load_table(spark, sf_dir, "events")
-        lv = StreamingLatestView(tempfile.mkdtemp(prefix="q106_latest_"))
+        root = _scratch("q106_latest_")
+        shutil.rmtree(root, ignore_errors=True)
+        lv = StreamingLatestView(root)
         for i in range(3):
             lv.update(e.filter(F.col("event_id") % 4 == i), epoch_id=i)
         lv.compact(spark)

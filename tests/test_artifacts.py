@@ -277,3 +277,52 @@ def test_production_pairs_built_once_then_reused(spark, sf_dir, monkeypatch):
     assert len(calls) == 1
     all_queries()["q207_dup_source_matrix"](spark, sf_dir).count()
     assert len(calls) == 1  # q207 consumed the artifact, not the pipeline
+
+
+def test_artifact_build_bands_once(spark, sf_dir, tmp_path, monkeypatch):
+    """An artifact miss bands the signatures once: the persisted bands
+    are the relation the pair join consumes. The labels still equal
+    the inline clustering."""
+    from redix_stream_spark.llm import dedup
+
+    shutil.copy(
+        os.path.join(sf_dir, "documents.parquet"), tmp_path / "documents.parquet"
+    )
+    calls = []
+    real = dedup.banded_keys
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(dedup, "banded_keys", counting)
+    root = os.path.join(
+        tempfile.gettempdir(), ARTIFACT_PREFIX + corpus_fingerprint(str(tmp_path))
+    )
+    try:
+        got = {tuple(r) for r in cluster_labels(spark, str(tmp_path)).collect()}
+        assert len(calls) == 1
+        d = spark.read.parquet(str(tmp_path / "documents.parquet"))
+        assert got == {tuple(r) for r in neardup_clusters(d).collect()}
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_sset_sweep_spares_live_foreign_pids():
+    """The shingle-set scratch sweep is per process: a live sibling
+    session's dir survives, and this process keeps at most _SSET_KEEP."""
+    from redix_stream_spark.llm.dedup import _SSET_KEEP, _SSET_PREFIX, _sset_scratch
+
+    base = tempfile.gettempdir()
+    foreign = os.path.join(base, f"{_SSET_PREFIX}{os.getppid()}_foreigntest")
+    os.makedirs(foreign, exist_ok=True)
+    try:
+        for _ in range(5):
+            _sset_scratch()
+        assert os.path.isdir(foreign)
+        own = [
+            n for n in os.listdir(base) if n.startswith(f"{_SSET_PREFIX}{os.getpid()}_")
+        ]
+        assert 0 < len(own) <= _SSET_KEEP
+    finally:
+        shutil.rmtree(foreign, ignore_errors=True)

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from redix_stream_spark.llm.dedup import (
     JACCARD_THRESHOLD,
+    banded_keys,
     exact_jaccard,
     lsh_candidate_pairs,
     minhash_signatures,
@@ -38,9 +39,9 @@ def test_minhash_lsh_finds_planted_near_duplicates(spark):
         "reordering predicate pushdown and columnar execution engines today"
     )
     docs = _docs(spark, [(1, BASE), (2, edited), (3, other)])
-    pairs = exact_jaccard(docs, lsh_candidate_pairs(minhash_signatures(docs))).filter(
-        F.col("jaccard") >= JACCARD_THRESHOLD
-    )
+    pairs = exact_jaccard(
+        docs, lsh_candidate_pairs(banded_keys(minhash_signatures(docs)))
+    ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     got = {(r["doc_id_a"], r["doc_id_b"]) for r in pairs.collect()}
     assert got == {(1, 2)}
 
@@ -61,7 +62,7 @@ def test_minhash_production_params_find_planted_dups(spark):
     )
     docs = _docs(spark, [(1, BASE), (2, edited), (3, other)])
     sig = minhash_signatures(docs, params=perm_params(64))
-    pairs = exact_jaccard(docs, lsh_candidate_pairs(sig, n_bands=16)).filter(
+    pairs = exact_jaccard(docs, lsh_candidate_pairs(banded_keys(sig, 16))).filter(
         F.col("jaccard") >= JACCARD_THRESHOLD
     )
     got = {(r["doc_id_a"], r["doc_id_b"]) for r in pairs.collect()}
@@ -116,7 +117,7 @@ def test_minhash_candidates_recall_against_exact(spark, sf_dir):
     got = {
         (r["doc_id_a"], r["doc_id_b"])
         for r in exact_jaccard(
-            d, lsh_candidate_pairs(minhash_signatures(d))
+            d, lsh_candidate_pairs(banded_keys(minhash_signatures(d)))
         )
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .collect()
@@ -539,6 +540,32 @@ def test_streaming_neardup_filter_cross_and_intra_batch(spark, tmp_path):
     ) == [1, 3, 5]
 
 
+def test_streaming_neardup_bands_each_batch_once(spark, tmp_path, monkeypatch):
+    """A micro-batch bands its signatures once: the hit probe, the
+    intra-batch pair join and the claims all read the same bands."""
+    from redix_stream_spark.llm import stream_dedup
+
+    calls = []
+    real = stream_dedup.banded_keys
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(stream_dedup, "banded_keys", counting)
+    f = stream_dedup.StreamingNearDupFilter(
+        index_path=str(tmp_path / "bands"),
+        accepted_path=str(tmp_path / "accepted"),
+    )
+    other = (
+        "completely different content about query optimizers join "
+        "reordering predicate pushdown and columnar execution engines today"
+    )
+    f.apply_batch(_docs(spark, [(1, BASE), (2, BASE), (3, other)]), 0)
+    assert len(calls) == 1
+    assert sorted(r["doc_id"] for r in f.accepted(spark).collect()) == [1, 3]
+
+
 def test_streaming_neardup_index_compaction(spark, tmp_path):
     """compact_index collapses the append-only band index to one row per
     band_key (min owner) with a bounded file count, and the filter keeps
@@ -584,10 +611,7 @@ def test_streaming_neardup_bucketed_index(spark, tmp_path):
     semantics as the path layout, claims append into the bucketing, and
     the per-batch hit-join reads the index Exchange-free — only the
     (small) batch side shuffles into the bucket layout."""
-    from redix_stream_spark.llm.stream_dedup import (
-        StreamingNearDupFilter,
-        _band_keys,
-    )
+    from redix_stream_spark.llm.stream_dedup import StreamingNearDupFilter
     from redix_stream_spark.llm.dedup import minhash_signatures
     from redix_stream_spark.plans import formatted_plan
 
@@ -630,7 +654,7 @@ def test_streaming_neardup_bucketed_index(spark, tmp_path):
             probe = spark.createDataFrame(
                 [(9, other)], "doc_id long, text string"
             )
-            bands = _band_keys(
+            bands = banded_keys(
                 minhash_signatures(probe, params=f.params), f.n_bands
             )
             j = bands.join(f._claimed(spark), "band_key", "left_semi")

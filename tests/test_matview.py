@@ -416,3 +416,21 @@ def test_quantile_view_under_real_stream(spark, tmp_path):
     one.ingest_batch(spark.createDataFrame(b1 + b2, SCHEMA), epoch_id=0)
     got = {tuple(r) for r in qv.quantiles().collect()}
     assert got == {tuple(r) for r in one.quantiles().collect()} and got
+
+
+def test_q105_reuses_one_scratch_dir(spark, sf_dir):
+    """Each q105 call rebuilds its view in the one swept per-prefix
+    scratch dir: repeated drives must not leave a directory per call."""
+    import tempfile
+
+    from redix_stream_spark.registry import all_queries
+
+    def n_dirs():
+        base = tempfile.gettempdir()
+        return sum(1 for n in os.listdir(base) if n.startswith("q105_matview_"))
+
+    q105 = all_queries()["q105_matview_rollup"]
+    first = q105(spark, sf_dir).collect()
+    n = n_dirs()
+    assert sorted(q105(spark, sf_dir).collect()) == sorted(first)
+    assert n_dirs() <= n
