@@ -350,9 +350,9 @@ def _minhash_neardup_pipeline(
     n_bands: int | None = None,
 ) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    # Signatures feed both branches of the band self-join; cache them (tiny:
-    # one row of #perms longs per doc) instead of recomputing the md5
-    # shingling per branch — halves the pipeline's wall clock.
+    # banded_keys checkpoints eagerly, so only one job reads this cache
+    # entry here; q80b's minhash_signatures(d).cache() on the same
+    # documents is plan-equal and reuses it (its unpersist() drops it).
     sig = minhash_signatures(d, params=params).cache()
     pairs = lsh_candidate_pairs(banded_keys(sig, n_bands))
     scored = exact_jaccard(d, pairs)
@@ -794,13 +794,18 @@ def q80b_neardup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     Star contraction converges in O(log² n) rounds REGARDLESS of
     diameter: large-star points every above-min neighbor at the
     neighborhood minimum (halving long paths), small-star flattens each
-    node's below-self neighborhood onto its minimum. Same join-per-round
-    skeleton — each round is two self-joins on the (shrinking) edge
-    list; labels never leave the cluster; the driver loop reads a 1-row
-    convergence count. Same oracle as q80: the rewrite must be
-    result-invisible (equality also pytest-pinned on planted chain /
-    star / random graphs, incl. a 256-chain that propagation's 20-round
-    cap cannot finish).
+    node's below-self neighborhood onto its minimum. Each round is one
+    checkpoint job with no join: both stars take their neighbourhood
+    minimum from a window. Convergence needs no extra round: a canonical
+    edge set is a star forest centred on component minima iff every
+    vertex has either no smaller neighbour, or exactly one smaller
+    neighbour and no larger one, and that count is observed inside the
+    job that computes the minima (see connected_components_star). The
+    near-dup pair graph is usually a star forest already, so q80b
+    typically runs no contraction round at all. Same oracle as q80: the
+    rewrite must be result-invisible (equality also pytest-pinned on
+    planted chain / star / random / tree graphs, incl. a 256-chain that
+    propagation's 20-round cap cannot finish).
     """
     d = load_table(spark, sf_dir, "documents")
     sig = minhash_signatures(d).cache()
@@ -819,7 +824,21 @@ def connected_components_star(pairs: DataFrame, max_rounds: int = 50) -> DataFra
     graph via alternating large-star/small-star (see q80b docstring).
     Returns (doc_id, cluster_id, is_canonical) for every vertex that
     appears in a pair — the q80 output contract.
+
+    Convergence is read off the edge set itself: a canonical edge set
+    (u < v, distinct, no self-loops) is a star forest centred on its
+    component minima iff every vertex has either no smaller neighbour,
+    or exactly one smaller neighbour and no larger one (⇐: the larger
+    end of any edge then has only that edge, and its smaller end has no
+    smaller neighbour, so every edge joins a leaf to its component's
+    minimum; ⇒ is immediate). The relation each round materializes is
+    the symmetric edge list with every vertex's neighbourhood minimum
+    and smaller/larger neighbour counts from ONE window, and the count
+    of rows breaking that condition is observed inside the same
+    checkpoint job. So a star forest — the fixed point, and the common
+    near-dup input — costs no contraction round and no confirming round.
     """
+    by_u = Window.partitionBy("u")
 
     def canon(e: DataFrame) -> DataFrame:
         return (
@@ -830,119 +849,76 @@ def connected_components_star(pairs: DataFrame, max_rounds: int = 50) -> DataFra
             .distinct()
         )
 
-    def sym(e: DataFrame) -> DataFrame:
-        return e.unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-
-    def large_star(e: DataFrame) -> DataFrame:
-        s = sym(e)
-        m = (
-            s.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", F.col("u")).alias("m"))
-        )
-        return canon(
-            s.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # orient each edge from its larger endpoint; group by that node
-        o = sym(e).filter(F.col("v") < F.col("u"))
-        m = (
-            o.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", F.col("u")).alias("m"))
-        )
-        joined = o.join(m, "u")
-        # ONE explode, not a two-branch union: each union branch
-        # re-derived the o⋈m join (and everything under it) per round.
-        return canon(
-            joined.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
-                        F.struct(F.col("u").alias("u"), F.col("m").alias("v")),
-                    )
-                ).alias("p")
-            ).select("p.*")
-        )
-
     # Per-round lineage truncation is load-bearing, not an optimization:
-    # each round's plan references the previous round's ~16× (two sym()
-    # self-unions, the star join, and the symmetric-difference check), so
-    # an uncheckpointed loop grows the LOGICAL plan exponentially and
-    # OOMs the analyzer around round 6 (measured on a 257-vertex chain).
-    # localCheckpoint materializes the round and restarts the plan; on a
-    # multi-node cluster use a reliable checkpoint dir for executor-loss
-    # tolerance (same loop shape).
-    def ckpt_with_fingerprint(e: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
-        # (count, bit_xor of xxhash64(u, v)) — the fingerprint RIDES the
-        # checkpoint materialization job via observe() (measured: metrics
-        # fire on localCheckpoint(eager=True)), so each round is exactly
-        # ONE job. bit_xor, not sum: Spark 4's default ANSI mode makes
-        # sum(bigint) throw on overflow and uniform 64-bit hashes
-        # overflow almost immediately; xor never does. Convergence
-        # detection only: a differing fingerprint is PROOF of change
-        # (skip the exceptAll most rounds pay), an equal one is
-        # confirmed exactly below, so a hash collision can never fake
-        # convergence.
+    # an uncheckpointed loop grows the logical plan with every round and
+    # OOMs the analyzer (measured on a 257-vertex chain). localCheckpoint
+    # materializes the round and restarts the plan; on a multi-node
+    # cluster use a reliable checkpoint dir for executor-loss tolerance
+    # (same loop shape).
+    def checked(e: DataFrame) -> tuple[DataFrame, int]:
+        # sym(e) as (u, v, mn = least neighbour of u) rows, plus the
+        # number of rows whose u breaks the star-forest condition. The
+        # count rides the checkpoint job via observe() (metrics fire on
+        # localCheckpoint(eager=True)).
+        u, v = F.col("u"), F.col("v")
+        smaller = F.count_if(v < u).over(by_u)
+        larger = F.count_if(v > u).over(by_u)
+        breaks = (smaller > 1) | ((smaller >= 1) & (larger >= 1))
         obs = Observation()
-        ck = e.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).localCheckpoint(eager=True)
-        got = obs.get
-        return ck, (got["n"], got["h"])
+        ck = (
+            e.select(
+                F.explode(
+                    F.array(F.struct(u, v), F.struct(v.alias("u"), u.alias("v")))
+                ).alias("e")
+            )
+            .select("e.*")
+            .select("u", "v", F.min(v).over(by_u).alias("mn"), breaks.alias("b"))
+            .observe(obs, F.count_if("b").alias("bad"))
+            .select("u", "v", "mn")
+            .localCheckpoint(eager=True)
+        )
+        return ck, obs.get["bad"]
 
-    edges, fp = ckpt_with_fingerprint(
+    def contract(rows: DataFrame) -> DataFrame:
+        # large-star: point every larger neighbour v of u at
+        # m(u) = least(mn, u). v > u >= m, so each output row already
+        # runs from its larger to its smaller endpoint.
+        ls = rows.filter(F.col("v") > F.col("u")).select(
+            F.col("v").alias("u"), F.least("mn", "u").alias("v")
+        )
+        # small-star: point u and its smaller neighbours at the least of
+        # them; ONE explode, not a two-branch union (a union branch
+        # re-derives its whole subtree).
+        ss = ls.select("u", "v", F.min("v").over(by_u).alias("m")).select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
+                    F.struct(F.col("u").alias("u"), F.col("m").alias("v")),
+                )
+            ).alias("p")
+        )
+        return canon(ss.select("p.*"))
+
+    rows, bad = checked(
         canon(
             pairs.select(
                 F.col("doc_id_a").alias("u"), F.col("doc_id_b").alias("v")
             )
         )
     )
-    for _ in range(max_rounds):
-        # Lazy-checkpoint the large-star output before small_star reads
-        # it: small_star's plan references its input ~4× (sym + the o⋈m
-        # join's two sides), and without the RDD boundary each reference
-        # re-executed large_star's join+distinct (the r10 rule). Lazy:
-        # it materializes inside the round's one eager-checkpoint job.
-        ls = large_star(edges).localCheckpoint(eager=False)
-        new_edges, nfp = ckpt_with_fingerprint(small_star(ls))
-        converged = False
-        if nfp == fp:
-            # equal counts + distinct sets: new ⊆ old ⟺ sets equal, so
-            # ONE one-sided exceptAll confirms (the old check paid two,
-            # every round — the fingerprint fast-path pays the exact
-            # check exactly once, at convergence).
-            converged = new_edges.exceptAll(edges).limit(1).count() == 0
-        edges = new_edges
-        fp = nfp
-        if converged:
-            break
-    else:
-        raise RuntimeError("star contraction did not converge")
-    # converged: a star forest — every vertex's min neighbor (or itself,
-    # for roots) is its component minimum
-    labels = (
-        sym(edges)
-        .groupBy("u")
-        .agg(F.min("v").alias("mn"))
-        .select(
-            F.col("u").alias("doc_id"),
-            F.least("mn", F.col("u")).alias("cluster_id"),
-        )
+    rounds = 0
+    while bad:
+        if rounds == max_rounds:
+            raise RuntimeError("star contraction did not converge")
+        rows, bad = checked(contract(rows))
+        rounds += 1
+    # a star forest: one row per vertex (its least neighbour) carries
+    # its label, the centre's own id for centres and the centre for leaves
+    return rows.filter(F.col("v") == F.col("mn")).select(
+        F.col("u").alias("doc_id"),
+        F.least("mn", "u").alias("cluster_id"),
+        (F.col("u") <= F.col("mn")).cast("long").alias("is_canonical"),
     )
-    out = labels.select(
-        "doc_id",
-        "cluster_id",
-        (F.col("doc_id") == F.col("cluster_id")).cast("long").alias("is_canonical"),
-    )
-    return out
 
 
 def _gen_clean_corpus_sql() -> str:

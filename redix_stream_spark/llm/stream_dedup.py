@@ -61,10 +61,7 @@ class _PathIndexedFilter:
     def _index_dir(self) -> str:
         """Current generation dir for the path-mode index (committed on
         first use so appends always have a live target)."""
-        if self._index_state.current_gen() is None:
-            gen, _ = self._index_state.stage()
-            self._index_state.commit(gen)
-        return self._index_state.current_dir()
+        return self._index_state.ensure_committed()
 
     def run(self, doc_stream: DataFrame, checkpoint_dir: str, **trigger):
         """Attach to a streaming (doc_id, text) DataFrame; returns the

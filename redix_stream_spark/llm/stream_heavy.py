@@ -75,9 +75,7 @@ class StreamingHeavyHitters:
         self.spark = spark
         self.state_dir = state_dir
         self._state = GenerationState(state_dir)
-        if self._state.current_gen() is None:
-            gen, _ = self._state.stage()
-            self._state.commit(gen, lossy_reduces=0)
+        self._state.ensure_committed(lossy_reduces=0)
 
     def _gen_dir(self) -> str:
         return self._state.current_dir()

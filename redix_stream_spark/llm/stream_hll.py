@@ -58,9 +58,7 @@ class StreamingHll:
         self.spark = spark
         self.group_col = group_col
         self._state = GenerationState(state_dir)
-        if self._state.current_gen() is None:
-            gen, _ = self._state.stage()
-            self._state.commit(gen)
+        self._state.ensure_committed()
 
     #: Reserved partition for compacted history — OUTSIDE the caller's
     #: epoch-id namespace, so a checkpoint restarting at epoch 0 after a

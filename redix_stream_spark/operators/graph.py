@@ -470,19 +470,20 @@ def kcore_peel(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -
     Returns the surviving nodes with their degree inside the surviving
     subgraph (recomputed after the last peel).
 
-    Scale shape per round: the edge relation is semi-joined against the
-    node-sized survivor set on both endpoints (two hash semi-joins), then
-    one map-side-combined degree count — nothing edge-squared, nothing on
-    the driver. The symmetric edge list is MATERIALIZED ONCE
-    (localCheckpoint) before the loop: it is read 2·rounds+2 times, and
-    without truncation every round re-executes the full upstream edge
-    build (for the co-occurrence graph: distinct→collect_set→explode —
-    measured 20.3 s → 5.5 s at sf0.1 from this alone). On a cluster the
-    equivalent is persisting the edge relation (or bucketing it by
-    endpoint) once and reusing it every round; the survivor relation only
-    shrinks. Survivor lineage grows linearly in ``rounds`` —
-    localCheckpoint it too past ~10 rounds (the q80 lesson; irrelevant at
-    the bounded default).
+    Each round keeps the symmetric edge list induced on the survivors,
+    with two windows and no join: ``count(*) OVER (PARTITION BY u) >= k``
+    flags each row's node, and ``min(ok) OVER (PARTITION BY least(u, v),
+    greatest(u, v))`` — the edge's two orientations — keeps an edge only
+    if both endpoints survive. The survivor set of a round is the set of
+    ``u`` left in it, so the relation is KCORE_SQL's semi-join peel (by
+    induction: round i's edges are exactly the edges among round i's
+    survivors, whose degrees decide round i+1). No count action, no
+    survivor ``distinct``: the rounds stay one lazy plan, and the final
+    ``groupBy(u)`` gives ``core_deg``. The symmetric edge list is
+    MATERIALIZED ONCE (localCheckpoint): without truncation every round
+    re-executed the full upstream edge build (for the co-occurrence
+    graph: distinct→collect_set→explode — measured 20.3 s → 5.5 s at
+    sf0.1 from this alone).
     """
     sym = (
         edges.select(
@@ -496,27 +497,23 @@ def kcore_peel(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -
         .select("e.*")
         .localCheckpoint()
     )
-    alive = sym.select(F.col("u").alias("node")).distinct()
+    by_node = Window.partitionBy("u")
+    by_edge = Window.partitionBy(F.least("u", "v"), F.greatest("u", "v"))
     for _ in range(rounds):
-        deg = (
-            sym.join(alive.withColumnRenamed("node", "u"), "u", "left_semi")
-            .join(alive.withColumnRenamed("node", "v"), "v", "left_semi")
-            .groupBy("u")
-            .agg(F.count(F.lit(1)).cast("long").alias("d"))
+        sym = (
+            sym.select("u", "v", (F.count(F.lit(1)).over(by_node) >= k).alias("ok"))
+            .select("u", "v", F.min("ok").over(by_edge).alias("keep"))
+            .filter("keep")
+            .select("u", "v")
         )
-        alive = deg.filter(F.col("d") >= k).select(F.col("u").alias("node"))
-    final_deg = (
-        sym.join(alive.withColumnRenamed("node", "u"), "u", "left_semi")
-        .join(alive.withColumnRenamed("node", "v"), "v", "left_semi")
-        .groupBy("u")
-        .agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
+    return sym.groupBy(F.col("u").alias("part")).agg(
+        F.count(F.lit(1)).cast("long").alias("core_deg")
     )
-    return final_deg.select(F.col("u").alias("part"), "core_deg")
 
 
 def _sql_peel(prev: str, out: str, k: int) -> str:
     """One synchronized peel: degree within the survivor-induced subgraph,
-    then threshold. Mirrors kcore_peel's semi-join structure."""
+    then threshold (kcore_peel computes the same relation with windows)."""
     return f"""
 {out}_d AS (
   SELECT e.u, CAST(COUNT(*) AS BIGINT) AS d

@@ -219,15 +219,25 @@ class EventLogWriteCommit(WriterCommitMessage):
 class EventLogWriter(DataSourceWriter):
     """Append-only writer: each task writes one parquet part file of
     message rows; commit is rename-free (parquet files are immutable and
-    readers key on row content, not file names), abort removes the task's
+    readers key on row content, not file names), abort removes the job's
     files. Ids must be pre-assigned by the producer — the single-writer
     id authority lives in EventLog, exactly like the reference's Redis
-    server owns XADD ids (stream.ex:29)."""
+    server owns XADD ids (stream.ex:29).
+
+    A part file appears under its final name only once complete: the
+    task writes a dot-prefixed temp file in the same directory and
+    ``os.replace``s it. Spark's file listing and pyarrow datasets both
+    skip dot-prefixed names, so a concurrent reader (``_max_id``, a
+    file-stream trigger) never opens a half-written part."""
 
     def __init__(self, options: dict):
+        import uuid
+
         self.path = options.get("path")
         if not self.path:
             raise ValueError("eventlog sink requires option 'path'")
+        # One token per write job: abort sweeps only this job's temps.
+        self.job = uuid.uuid4().hex[:12]
 
     def write(self, iterator) -> EventLogWriteCommit:
         import os
@@ -244,19 +254,30 @@ class EventLogWriter(DataSourceWriter):
             {c: [getattr(r, c) for r in rows] for c in cols}
         )
         os.makedirs(self.path, exist_ok=True)
-        fname = os.path.join(self.path, f"part-{uuid.uuid4().hex}.parquet")
-        pq.write_table(table, fname)
+        name = f"part-{self.job}-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.path, f".{name}.tmp")
+        fname = os.path.join(self.path, name)
+        try:
+            pq.write_table(table, tmp)
+            os.replace(tmp, fname)
+        finally:  # a failed write leaves no temp behind
+            if os.path.exists(tmp):
+                os.remove(tmp)
         return EventLogWriteCommit([fname])
 
     def commit(self, messages) -> None:
         pass  # files are already durable and self-contained
 
     def abort(self, messages) -> None:
+        import glob
         import os
 
+        leftovers = glob.glob(
+            os.path.join(glob.escape(self.path), f".part-{self.job}-*.parquet.tmp")
+        )
         for m in messages:
-            if m is None:
-                continue
-            for f in m.files:
-                if os.path.exists(f):
-                    os.remove(f)
+            if m is not None:
+                leftovers.extend(m.files)
+        for f in leftovers:
+            if os.path.exists(f):
+                os.remove(f)

@@ -123,6 +123,14 @@ class GenerationState:
         os.makedirs(path, exist_ok=True)
         return gen, path
 
+    def ensure_committed(self, **meta) -> str:
+        """The live generation directory. If nothing is committed yet,
+        stage and commit the first generation (with ``meta``) first."""
+        if self.current_gen() is None:
+            gen, _ = self.stage()
+            self.commit(gen, **meta)
+        return self.current_dir()
+
     def commit(self, gen: int, **meta) -> None:
         """Atomically flip the pointer to ``gen``, carrying ``meta``.
 

@@ -47,9 +47,7 @@ class StreamingQuantileView:
         self.spark = spark
         self.key = key
         self._state = GenerationState(state_dir)
-        if self._state.current_gen() is None:
-            gen, _ = self._state.stage()
-            self._state.commit(gen)
+        self._state.ensure_committed()
 
     def _epoch_path(self, epoch_id: int) -> str:
         return os.path.join(self._state.current_dir(), f"epoch={epoch_id}")

@@ -35,6 +35,19 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+def jobs_in_group(spark, group: str, fn):
+    """Run ``fn()`` under job group ``group``; returns its result and the
+    ids of the Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
 def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLES:

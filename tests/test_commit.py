@@ -62,6 +62,19 @@ def test_generation_state_basics(tmp_path):
     assert g2 > g0
 
 
+def test_ensure_committed_bootstraps_gen0_once(tmp_path):
+    gs = GenerationState(str(tmp_path / "s"))
+    d0 = gs.ensure_committed(lossy_reduces=0)
+    assert d0 == gs.gen_dir(0) and os.path.isdir(d0)
+    assert gs.meta() == {"lossy_reduces": 0}
+    # already committed: nothing is staged, the pointer is untouched
+    g1, _ = gs.stage()
+    gs.commit(g1, lossy_reduces=1)
+    assert gs.ensure_committed(lossy_reduces=0) == gs.gen_dir(g1)
+    assert gs.meta() == {"lossy_reduces": 1}
+    assert gs._existing_gens() == [0, g1]
+
+
 def test_matview_crash_between_stage_and_commit(spark, tmp_path, crash_commit):
     # The old swap's worst bug: base swapped in, folded-epoch manifest
     # not yet written -> folded epochs read twice. With the pointer the

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from redix_stream_spark.llm.dedup import (
     JACCARD_THRESHOLD,
     banded_keys,
+    connected_components_star,
     exact_jaccard,
     lsh_candidate_pairs,
     minhash_signatures,
@@ -18,6 +19,8 @@ from redix_stream_spark.llm.multimodal import (
     IMAGE_FEATURES_SCHEMA,
     extract_image_features,
 )
+
+from .conftest import jobs_in_group
 
 
 def _docs(spark, rows):
@@ -1356,6 +1359,12 @@ def test_star_contraction_equals_union_find_on_planted_graphs(spark):
             (random.randrange(500), random.randrange(500)) for _ in range(400)
         ],
         "cycle+pair": [(5, 9), (100, 101), (9, 7), (7, 5)],
+        "empty": [],
+        "star-forest": [(1, 2), (1, 3), (1, 4), (10, 11), (20, 25), (20, 21)],
+        "loops+dups+reversed": [
+            (2, 1), (1, 2), (1, 2), (2, 2), (3, 2), (3, 3), (4, 3), (3, 4),
+        ],
+        "two-level-tree": [(1, 2), (1, 3), (2, 4), (2, 5), (3, 6), (3, 7)],
     }
     for name, pairs_py in graphs.items():
         pairs = spark.createDataFrame(pairs_py, "doc_id_a long, doc_id_b long")
@@ -1364,6 +1373,30 @@ def test_star_contraction_equals_union_find_on_planted_graphs(spark):
             for r in connected_components_star(pairs).collect()
         }
         assert got == union_find(pairs_py), name
+
+
+def test_star_forest_input_runs_no_contraction_round(spark):
+    # A star forest centred on component minima is the fixed point: the
+    # star-forest check rides the first checkpoint job, so building the
+    # components runs only that job (AQE adds one job per shuffle stage:
+    # the canonical distinct and the neighbourhood window) — no round,
+    # no confirming round, no set-difference check.
+    schema = "doc_id_a long, doc_id_b long"
+    forest = spark.createDataFrame([(1, 2), (1, 3), (7, 8), (7, 9)], schema)
+    out, jobs = jobs_in_group(
+        spark, "cc-star-forest", lambda: connected_components_star(forest)
+    )
+    assert len(jobs) <= 3, jobs
+    assert sorted(map(tuple, out.collect())) == [
+        (1, 1, 1), (2, 1, 0), (3, 1, 0), (7, 7, 1), (8, 7, 0), (9, 7, 0),
+    ]
+    # a path is not a star forest: it pays at least one more checkpoint
+    path = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], schema)
+    out, path_jobs = jobs_in_group(
+        spark, "cc-star-path", lambda: connected_components_star(path)
+    )
+    assert len(path_jobs) > len(jobs)
+    assert {r["cluster_id"] for r in out.collect()} == {1}
 
 
 def test_q80b_star_equals_q80_propagation(spark, sf_dir):

@@ -4,6 +4,7 @@ re-expressed against the Structured-Streaming runtime."""
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -735,6 +736,49 @@ def test_eventlog_datasource_writer_roundtrip(spark, tmp_path):
 
     with _pytest.raises(Exception):
         df.write.format("eventlog").option("path", out).mode("overwrite").save()
+
+
+def test_eventlog_sink_publishes_only_complete_part_files(monkeypatch, tmp_path):
+    # Each part is written under a dot-prefixed temp name (skipped by
+    # Spark's and pyarrow's listings) and renamed into place, so a
+    # concurrent reader never lists a half-written file; abort removes
+    # the job's parts and any temp a failed task left behind.
+    import pyarrow.parquet as pq
+    from pyspark.sql import Row
+
+    from redix_stream_spark.sources.eventlog_source import EventLogWriter
+
+    written = []
+    real = pq.write_table
+
+    def recording(table, where, *a, **kw):
+        written.append(where)
+        return real(table, where, *a, **kw)
+
+    monkeypatch.setattr(pq, "write_table", recording)
+    out = tmp_path / "sink"
+    w = EventLogWriter({"path": str(out)})
+    rows = [Row(event_id=i, event_type="t") for i in range(3)]
+    msgs = [w.write(iter(rows)), w.write(iter(rows[:1])), w.write(iter([]))]
+    assert len(written) == 2
+    assert all(os.path.basename(p).startswith(".") for p in written), written
+    names = sorted(os.listdir(out))
+    assert len(names) == 2
+    assert all(n.startswith("part-") and n.endswith(".parquet") for n in names)
+    assert pq.read_table(str(out)).num_rows == 4
+
+    def failing(table, where, *a, **kw):
+        real(table, where, *a, **kw)
+        raise OSError("disk gone")
+
+    monkeypatch.setattr(pq, "write_table", failing)
+    with pytest.raises(OSError):
+        w.write(iter(rows))
+    assert sorted(os.listdir(out)) == names
+    # a temp file left by a task killed mid-write is swept by abort
+    (out / f".part-{w.job}-dead.parquet.tmp").write_bytes(b"PAR1")
+    w.abort(msgs + [None])
+    assert os.listdir(out) == []
 
 
 def test_pipeline_crash_resume(spark, tmp_path):
